@@ -1206,7 +1206,7 @@ object SparkEntry {
     },
 
     // the object-store commit path under the hard oracle: q06's MERGE
-    // semantics executed THROUGH ManifestStore.conditionalPut — the
+    // semantics executed THROUGH ManifestStore — the
     // bootstrap commits version 1 via a conditional manifest create
     // (no rename on any commit path), the upsert commits version 2,
     // and the served result is the manifest-RESOLVED live state. The
@@ -1214,7 +1214,7 @@ object SparkEntry {
     // invisible in the data. Re-running converges (same upserts on the
     // merged state reproduce it), so bench passes are stable.
     "q106_upsert_manifest" -> { (s, d) =>
-      val store = graft.ext.ManifestStore.conditionalPut
+      val store = graft.ext.ManifestStore
       val tbl = scratchPath("manifest_upsert", d)
       val orders = Tables.orders(s, d)
       val target = orders.filter(col("o_orderstatus") === "F")
@@ -1238,7 +1238,7 @@ object SparkEntry {
     // conditional manifest creates, served via manifest resolution.
     // q87's oracle verbatim: the store must be invisible in the data
     "q111_evolve_manifest" -> { (s, d) =>
-      val store = graft.ext.ManifestStore.conditionalPut
+      val store = graft.ext.ManifestStore
       val tbl = scratchPath("manifest_evolve", d)
       val orders = Tables.orders(s, d)
       val target = orders.filter(col("o_orderstatus") === "F")

@@ -3,105 +3,45 @@ package graft.ext
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** The commit seam: every crash-safe publish in this library reduces
-  * to ONE primitive — make a small control file (a manifest, a version
-  * claim) visible at a destination all-or-nothing, failing cleanly if
-  * the destination already exists. Which implementation of that
-  * primitive is SAFE depends on the storage:
+/** The commit primitive: every crash-safe publish in this library
+  * reduces to ONE operation — make a small control file (a manifest,
+  * a checkpoint) visible at a destination all-or-nothing, failing
+  * cleanly if the destination already exists. The path scheme decides
+  * how that is done safely on the storage underneath:
   *
-  *   - HDFS / local POSIX: `rename` is atomic, so stage-and-rename
-  *     ([[RenameCommit]]) is the classic commit point.
-  *   - Object stores (S3/MinIO — the substrate the reference actually
-  *     runs on, ref: mnt/spark-conf/spark-defaults.conf:4-10): rename
-  *     is COPY+DELETE, not atomic, and a crash mid-"rename" leaves
-  *     both or neither path. The safe primitive there is a
-  *     conditional put — create-if-absent of the whole object
-  *     ([[PutIfAbsentCommit]]), which S3 exposes as
-  *     `If-None-Match: *` and HDFS as create-no-overwrite. This is
-  *     the same storage split Delta's LogStore abstraction exists to
-  *     solve (public design: HDFSLogStore renames, S3DynamoDBLogStore
-  *     / conditional-put stores create).
+  *   - `file://` (or no scheme): the content is written to a
+  *     uniquely-named sibling and hard-linked into place — `link(2)`
+  *     is atomic and fails on an existing destination, so a reader
+  *     sees no manifest or the whole manifest, and two racing writers
+  *     cannot both win.
+  *   - Object stores (s3a/gs/abfs/…; S3/MinIO is the substrate the
+  *     reference runs on, ref: mnt/spark-conf/spark-defaults.conf:4-10):
+  *     `fs.create(dst, overwrite = false)` + close is ONE whole-object
+  *     conditional PUT (`If-None-Match: *`), so the name claim and the
+  *     content publish are the same atomic step. Rename there is
+  *     COPY+DELETE and is never used.
+  *   - Anything else (HDFS above all): create-no-overwrite would claim
+  *     the name atomically but stream the content afterwards, leaving
+  *     a visible partial manifest after a crash, so the content is
+  *     staged beside the destination and renamed into place — HDFS
+  *     rename is atomic and fails on an existing destination.
   *
-  * Data files never need either primitive: they are written ONCE into
-  * uniquely-named immutable locations and become visible only when a
-  * control file referencing them commits ([[graft.ext.Versioned]]'s
-  * layout). Only the pointer flip must be atomic.
+  * This is the storage split Delta's LogStore exists to solve
+  * (HDFSLogStore renames, conditional-put stores create). Data files
+  * never need the primitive: they are written ONCE into uniquely-named
+  * immutable locations and become visible only when a control file
+  * referencing them commits ([[graft.ext.Versioned]]'s layout). Only
+  * the pointer flip must be atomic.
   */
-sealed trait CommitProtocol {
-  def name: String
+private[graft] object Commit {
+
+  private val wholeObjectPutSchemes =
+    Set("s3a", "s3n", "s3", "gs", "abfs", "abfss", "wasb", "wasbs", "oss", "cos")
 
   /** Publish `content` at `dst` all-or-nothing iff `dst` is absent.
     * Returns true when this call committed; false when the claim was
     * lost (dst already exists — a concurrent writer won). Readers
-    * must never observe a partial `dst`. */
-  def putIfAbsent(fs: FileSystem, dst: Path, content: Array[Byte]): Boolean
-}
-
-/** Stage-and-rename: write the content to a staging name beside the
-  * destination, then rename into place. The rename IS the commit —
-  * atomic on HDFS semantics, where rename-to-existing also FAILS and
-  * so doubles as the claim check. POSIX rename silently REPLACES an
-  * existing destination, so the local-FS path adds an explicit
-  * pre-check — best-effort (check→rename is two steps), the
-  * single-writer caveat the swap protocol has always carried. NOT
-  * safe on object stores, where rename is copy+delete. */
-object RenameCommit extends CommitProtocol {
-  val name = "rename"
-
-  def putIfAbsent(fs: FileSystem, dst: Path, content: Array[Byte]): Boolean = {
-    // staging name must NOT share dst's extension: a directory lister
-    // keyed on the suffix (Versioned.versions() matches *.manifest)
-    // would otherwise see the in-flight stage — or, after a crash
-    // mid-commit, a permanent stray — as a (malformed) committed name.
-    // And it must be unique PER ATTEMPT: two writers racing the same
-    // destination with a shared staging name would truncate each
-    // other's half-written stage (measured: the racing-appender spec
-    // failed on exactly this before the nonce).
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val tmp = new Path(dst.getParent, s".tmp-${dst.getName}.$nonce.staging")
-    val out = fs.create(tmp, true)
-    try out.write(content)
-    finally out.close()
-    if (fs.exists(dst) || !fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      false
-    } else true
-  }
-}
-
-/** Conditional put: create the destination object itself, failing if
-  * it exists — no rename anywhere. This is the object-store-safe
-  * commit: S3 conditional PUT (`If-None-Match: *`) publishes the
-  * whole object atomically with the existence check; HDFS
-  * create-no-overwrite claims the name atomically at create time.
-  *
-  * On a known object-store scheme the direct
-  * `fs.create(dst, overwrite = false)` + close maps to a single
-  * whole-object PUT (an object store has no partial-file state for
-  * readers to observe). On every OTHER remote scheme — HDFS above
-  * all — that create would claim the name atomically but stream the
-  * content afterwards, so a crash mid-write leaves a visible partial
-  * manifest; those delegate to [[RenameCommit]], whose rename is
-  * atomic AND claim-checking on HDFS semantics. On `file://` we
-  * emulate the conditional put EXACTLY — content is written to a
-  * uniquely-named sibling and then hard-linked into place
-  * (`link(2)` is atomic and fails on an existing destination), so a
-  * reader sees either no manifest or the complete manifest, never a
-  * half-written one, and two racing writers cannot both win. */
-object PutIfAbsentCommit extends CommitProtocol {
-  val name = "put-if-absent"
-
-  /** Schemes where create/close maps to ONE whole-object PUT, so the
-    * name claim and the content publish are the same atomic step. On
-    * anything else (HDFS above all), create-no-overwrite claims the
-    * NAME atomically but the content streams afterwards — a crash
-    * between create and close would leave a visible partial manifest,
-    * violating the trait contract — so those fall back to
-    * stage-and-rename, which on HDFS semantics is both atomic and
-    * claim-checking. */
-  private val wholeObjectPutSchemes =
-    Set("s3a", "s3n", "s3", "gs", "abfs", "abfss", "wasb", "wasbs", "oss", "cos")
-
+    * never observe a partial `dst`. */
   def putIfAbsent(fs: FileSystem, dst: Path, content: Array[Byte]): Boolean = {
     val scheme = Option(dst.toUri.getScheme).getOrElse(
       fs.getUri.getScheme)
@@ -119,7 +59,7 @@ object PutIfAbsentCommit extends CommitProtocol {
       try out.write(content)
       finally out.close()
       true
-    } else RenameCommit.putIfAbsent(fs, dst, content)
+    } else renameIfAbsent(fs, dst, content)
   }
 
   private def putIfAbsentLocal(dst: Path, content: Array[Byte]): Boolean = {
@@ -133,12 +73,35 @@ object PutIfAbsentCommit extends CommitProtocol {
       catch {
         case _: java.nio.file.FileAlreadyExistsException => false
         case _: UnsupportedOperationException =>
-          // no hardlinks on this FS: degrade to claim-then-move (the
-          // RenameCommit caveat applies)
+          // no hardlinks on this FS: degrade to claim-then-move
+          // (best-effort: check→move is two steps)
           if (Files.exists(target)) false
           else { Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE); true }
       }
     } finally Files.deleteIfExists(tmp)
+  }
+
+  /** The HDFS fallback: stage beside the destination, then rename into
+    * place. The rename IS the commit, and rename-to-existing fails, so
+    * it doubles as the claim check. The explicit `exists` pre-check
+    * guards filesystems whose rename replaces (best-effort: two steps). */
+  private def renameIfAbsent(fs: FileSystem, dst: Path, content: Array[Byte]): Boolean = {
+    // staging name must NOT share dst's extension: a directory lister
+    // keyed on the suffix (Versioned.versions() matches *.manifest)
+    // would otherwise see the in-flight stage — or, after a crash
+    // mid-commit, a permanent stray — as a (malformed) committed name.
+    // And it must be unique PER ATTEMPT: two writers racing the same
+    // destination with a shared staging name would truncate each
+    // other's half-written stage.
+    val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    val tmp = new Path(dst.getParent, s".tmp-${dst.getName}.$nonce.staging")
+    val out = fs.create(tmp, true)
+    try out.write(content)
+    finally out.close()
+    if (fs.exists(dst) || !fs.rename(tmp, dst)) {
+      fs.delete(tmp, false)
+      false
+    } else true
   }
 }
 
@@ -149,22 +112,22 @@ object PutIfAbsentCommit extends CommitProtocol {
   *   - [[SwapStore]]: the table IS a directory; replace = sibling-tmp
   *     write + directory rename swap. Fast, zero indirection, crash
   *     windows closed by [[graft.gold.Upsert.recoverSwap]] — but the
-  *     guarantee holds ONLY where directory rename is atomic
-  *     (HDFS/POSIX). The default, matching every existing call site.
+  *     swap is a local directory rename, so it serves `file:` and
+  *     scheme-less paths only and refuses any other scheme up front.
+  *     The default, matching every existing call site.
   *   - [[ManifestStore]]: the table is a POINTER — immutable
   *     uniquely-named data dirs published by a single manifest-file
-  *     commit through a [[CommitProtocol]]
-  *     ([[graft.ext.Versioned]]'s layout). With
-  *     [[PutIfAbsentCommit]] this is the object-store-safe story:
-  *     no rename on any path, a crash before the manifest commit
-  *     leaves only an invisible orphan dir (reclaimed by
+  *     commit through [[Commit.putIfAbsent]]
+  *     ([[graft.ext.Versioned]]'s layout). This is the
+  *     object-store-safe story: no rename on an object-store path, a
+  *     crash before the manifest commit leaves only an invisible
+  *     orphan dir (reclaimed by
   *     [[Versioned.pruneVersions]]), and there is NO window in which
   *     the live table is missing or partial. Reads resolve the
   *     newest manifest — one small-file read of indirection, the
   *     price Delta's log pays too.
   */
 sealed trait TableStore {
-  def name: String
   def exists(spark: SparkSession, path: String): Boolean
   /** Resolve the current live state. */
   def readLive(spark: SparkSession, path: String): DataFrame
@@ -200,10 +163,8 @@ private[ext] object CommitFiles {
 }
 
 object SwapStore extends TableStore {
-  val name = "swap"
-
   def exists(spark: SparkSession, path: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
+    java.nio.file.Files.exists(graft.gold.Upsert.localDir(path))
 
   def readLive(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -215,24 +176,10 @@ object SwapStore extends TableStore {
     CommitFiles.parquetUnder(spark, Seq(path))
 
   def rewrite(spark: SparkSession, path: String)(write: String => Unit): Unit =
-    if (!exists(spark, path)) {
-      // bootstrap all-or-nothing: stage to the swap tmp (recoverSwap
-      // clears any stale one) and move into place atomically, so a
-      // crashed bootstrap never leaves a partial dir a later call
-      // would read as the table
-      graft.gold.Upsert.recoverSwap(path)
-      val tmp = path.stripSuffix("/") + "__upsert_tmp"
-      write(tmp)
-      java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-        java.nio.file.Paths.get(path),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
-    } else graft.gold.Upsert.atomicRewrite(path)(write)
+    graft.gold.Upsert.atomicRewrite(path)(write)
 }
 
-final class ManifestStore(val protocol: CommitProtocol) extends TableStore {
-  val name = s"manifest(${protocol.name})"
-
+object ManifestStore extends TableStore {
   def exists(spark: SparkSession, path: String): Boolean =
     Versioned.latestVersion(spark, path).nonEmpty
 
@@ -246,16 +193,10 @@ final class ManifestStore(val protocol: CommitProtocol) extends TableStore {
   def recover(spark: SparkSession, path: String): Unit = ()
 
   def rewrite(spark: SparkSession, path: String)(write: String => Unit): Unit = {
-    Versioned.writeVersionWith(spark, path, protocol)(write)
+    Versioned.writeVersionWith(spark, path)(write)
     ()
   }
 
   def liveFiles(spark: SparkSession, path: String): Seq[(String, Long)] =
     Versioned.liveFiles(spark, path)
-}
-
-object ManifestStore {
-  /** The object-store-safe default. */
-  val conditionalPut: ManifestStore = new ManifestStore(PutIfAbsentCommit)
-  val renaming: ManifestStore = new ManifestStore(RenameCommit)
 }

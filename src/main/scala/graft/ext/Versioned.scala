@@ -48,19 +48,14 @@ import org.apache.hadoop.fs.Path
   *     data-skipping role). [[readVersionSkipping]] consults them.
   *
   * Each write lands its rows in a fresh `v<N>_data` directory, then
-  * commits by publishing `_versions/<N>.manifest` through a
-  * [[CommitProtocol]] — the manifest's appearance IS the commit
-  * point. [[PutIfAbsentCommit]] (the default) publishes by a
-  * conditional create: atomic on object stores (S3 `If-None-Match: *`
-  * — the reference's own substrate, S3A/MinIO,
-  * ref: mnt/spark-conf/spark-defaults.conf:4-10), emulated exactly on
-  * local POSIX via hardlink, and delegating to stage-and-rename on
-  * HDFS where that is the atomic primitive. [[RenameCommit]] remains
-  * the explicit opt-in for pure-HDFS deployments; it is no longer the
-  * default because POSIX rename silently replaces an existing
-  * destination, so two local racers could both "win" — a lost update
-  * the racing spec MEASURES. Safety is the default; the faster
-  * single-writer rename is the documented choice.
+  * commits by publishing `_versions/<N>.manifest` through
+  * [[Commit.putIfAbsent]] — the manifest's appearance IS the commit
+  * point. The path scheme picks how: a conditional create on object
+  * stores (S3 `If-None-Match: *` — the reference's own substrate,
+  * S3A/MinIO, ref: mnt/spark-conf/spark-defaults.conf:4-10), a
+  * hardlink on local POSIX, and stage-and-rename on HDFS where that
+  * is the atomic primitive. Every one of them fails on an existing
+  * destination, so two racers can never both "win".
   *
   * An overwrite manifest lists only its own data dir; an
   * append manifest lists the previous version's dirs plus its own —
@@ -72,8 +67,8 @@ import org.apache.hadoop.fs.Path
   * along with expired versions.
   *
   * Concurrency: version numbers are claimed by the manifest commit —
-  * put-if-absent fails on an existing destination under BOTH
-  * protocols, surfacing concurrent writers instead of silently
+  * put-if-absent fails on an existing destination on every scheme,
+  * surfacing concurrent writers instead of silently
   * dropping one (single-writer is the
   * expectation, as in the reference's Airflow `max_active_runs=1`,
   * `mnt/airflow/dags/yelp_pipeline.py:21`).
@@ -738,7 +733,7 @@ object Versioned {
     * dirs whose inline lines are individually cheap but collectively
     * tens of MB re-rendered every checkpoint). */
   private def writeCheckpoint(spark: SparkSession, dir: String, v: Int,
-                              fullLines: Seq[Line], protocol: CommitProtocol): Unit = {
+                              fullLines: Seq[Line]): Unit = {
     val (fs, _) = fsFor(spark, dir)
     def render(ls: Seq[Line]) =
       (ls.map(renderLine).mkString("\n") + "\n").getBytes("UTF-8")
@@ -772,7 +767,7 @@ object Versioned {
         bytes = render(out)
       }
     }
-    protocol.putIfAbsent(fs, checkpointPath(dir, v), bytes)
+    Commit.putIfAbsent(fs, checkpointPath(dir, v), bytes)
     ()
   }
 
@@ -908,10 +903,9 @@ object Versioned {
     * manifest commit is the atomic claim; a crash before the sidecar
     * lands costs nothing (resolution folds the chain). */
   private def commitChild(spark: SparkSession, dir: String, v: Int, parent: Int,
-                          fullLines: => Seq[Line], ops: => Seq[String],
-                          protocol: CommitProtocol): Unit = {
+                          fullLines: => Seq[Line], ops: => Seq[String]): Unit = {
     val opsV = ops
-    val ts = commitManifest(spark, dir, v, s"parent:$parent" +: opsV, protocol)
+    val ts = commitManifest(spark, dir, v, s"parent:$parent" +: opsV)
     // the sidecar must carry the same in-commit clock (and protocol
     // stamp) the manifest was stamped with — a checkpoint-resolved
     // read and a fold-resolved read of the same version answer
@@ -927,7 +921,7 @@ object Versioned {
         TsEntry(ts) +: ProtocolEntry(SupportedProtocol) +:
           (rearr ++ fullLines.filterNot(l =>
             l.isInstanceOf[TsEntry] || l.isInstanceOf[ProtocolEntry] ||
-              l.isInstanceOf[RearrangeEntry])), protocol)
+              l.isInstanceOf[RearrangeEntry])))
     }
   }
 
@@ -1456,8 +1450,7 @@ object Versioned {
     * already exists — as a logical column OR as another column's
     * physical storage name (the resurrect-collision guard). */
   def renameColumns(spark: SparkSession, dir: String,
-                    renames: Seq[(String, String)],
-                    protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                    renames: Seq[(String, String)]): Int = {
     require(renames.nonEmpty, "no columns to rename")
     val prev = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
@@ -1550,7 +1543,7 @@ object Versioned {
     val ops = ops0 ++
       constraints.filter(c => rewrittenConstraints.contains(c.name)).map(addOp) ++
       (if (genRewritten) Seq(addOp(SchemaEntry(physSchema))) else Seq.empty)
-    commitChild(spark, dir, v, prev, newLines, ops, protocol)
+    commitChild(spark, dir, v, prev, newLines, ops)
     v
   }
 
@@ -1577,8 +1570,7 @@ object Versioned {
     * a write racing between batches builds its own blooms at commit
     * time as usual. Returns the final committed version. */
   def declareBloomColumn(spark: SparkSession, dir: String, col: String,
-                         bits: Int = Bloom.defaultBits,
-                         protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                         bits: Int = Bloom.defaultBits): Int = {
     require(bits >= 64 && bits % 8 == 0,
       s"bloom bits must be a positive multiple of 8, got $bits")
     val prev = latestVersion(spark, dir).getOrElse(
@@ -1655,7 +1647,7 @@ object Versioned {
     var v = prev + 1
     commitChild(spark, dir, v, prev,
       ls.filter(notThisCol) ++ first,
-      s"-bloomcol:$phys" +: first.map(addOp), protocol)
+      s"-bloomcol:$phys" +: first.map(addOp))
     // remaining batches: one bounded build + commit each; each commit
     // is a child of the CURRENT latest, so a concurrent append between
     // batches keeps its own (write-time) blooms
@@ -1668,7 +1660,7 @@ object Versioned {
         cur.filterNot { case b: BloomEntry =>
           names.contains(b.dir) && b.col.equalsIgnoreCase(phys); case _ => false } ++
           entries,
-        entries.map(addOp), protocol)
+        entries.map(addOp))
       v = base + 1
     }
     v
@@ -1679,8 +1671,7 @@ object Versioned {
     * whole-index undeclare); a named column drops only its own
     * declaration and blooms, other columns stay live. */
   def dropBloomColumn(spark: SparkSession, dir: String,
-                      col: Option[String] = None,
-                      protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
+                      col: Option[String] = None): Option[Int] = {
     val prev = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
     val ls = lines(spark, dir, prev)
@@ -1702,7 +1693,7 @@ object Versioned {
       val v = prev + 1
       commitChild(spark, dir, v, prev,
         ls.filterNot(victim),
-        Seq(phys.fold("-bloomcol")(p => s"-bloomcol:$p")), protocol)
+        Seq(phys.fold("-bloomcol")(p => s"-bloomcol:$p")))
       Some(v)
     }
   }
@@ -1747,8 +1738,7 @@ object Versioned {
     * recorded change feeds do not clone (they speak the source's
     * writer ids and version numbers). */
   def cloneTable(spark: SparkSession, sourceDir: String, targetDir: String,
-                 version: Option[Int] = None,
-                 protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                 version: Option[Int] = None): Int = {
     val srcV = version.getOrElse(latestVersion(spark, sourceDir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $sourceDir")))
     require(versions(spark, sourceDir).contains(srcV),
@@ -1806,7 +1796,7 @@ object Versioned {
       case _: ChangesEntry   => None // speaks the source's version numbers
       case other             => Some(other) // schema/partition/colmap/notnull/constraint/bloomcol
     }
-    commitManifest(spark, targetDir, 0, cloned.map(renderLine), protocol)
+    commitManifest(spark, targetDir, 0, cloned.map(renderLine))
     0
   }
 
@@ -1844,8 +1834,7 @@ object Versioned {
   @volatile private[graft] var lastDeepCloneCounts: (Long, Long) = (0L, 0L)
 
   def cloneTableDeep(spark: SparkSession, sourceDir: String, targetDir: String,
-                     version: Option[Int] = None,
-                     protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                     version: Option[Int] = None): Int = {
     val srcV = version.getOrElse(latestVersion(spark, sourceDir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $sourceDir")))
     require(versions(spark, sourceDir).contains(srcV),
@@ -2003,7 +1992,7 @@ object Versioned {
       case _: ChangesEntry    => None // speaks the source's version numbers
       case other              => Some(other)
     }
-    commitManifest(spark, targetDir, 0, cloned.map(renderLine), protocol)
+    commitManifest(spark, targetDir, 0, cloned.map(renderLine))
     0
   }
 
@@ -2035,8 +2024,7 @@ object Versioned {
     * `_temporary` leftovers would silently join the table — clean
     * first). */
   def convertParquetDir(spark: SparkSession, dir: String,
-                        partCols: Seq[String] = Seq.empty,
-                        protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                        partCols: Seq[String] = Seq.empty): Int = {
     val (fs, root) = fsFor(spark, dir)
     require(fs.exists(root), s"no directory at $dir")
     require(latestVersion(spark, dir).isEmpty,
@@ -2098,7 +2086,7 @@ object Versioned {
       (if (partCols.nonEmpty) Seq(PartitionEntry(partCols)) else Seq.empty) ++
       (DataEntry(rootAbs) +:
         externalizeStats(spark, dir, Seq(StatsEntry(rootAbs, rows, cols, files))))
-    commitManifest(spark, dir, 0, v0.map(renderLine), protocol)
+    commitManifest(spark, dir, 0, v0.map(renderLine))
     0
   }
 
@@ -2133,7 +2121,6 @@ object Versioned {
                format: String = "parquet",
                schema: Option[StructType] = None,
                options: Map[String, String] = Map.empty,
-               protocol: CommitProtocol = PutIfAbsentCommit,
                maxAttempts: Int = 16): Option[(Int, Long, Int)] = {
     val fmt = format.trim.toLowerCase(java.util.Locale.ROOT)
     val exts = fmt match {
@@ -2208,7 +2195,7 @@ object Versioned {
         // withCommitRetry), and the retry re-reads the ledger — two
         // racing copyInto runs can never both load a file
         val basis = idFilled.orElse(Some(prev))
-        val v = writeVersionCore(spark, dir, protocol, SaveMode.Append,
+        val v = writeVersionCore(spark, dir, SaveMode.Append,
           txn = None,
           partitionBy = if (partCols.isEmpty) None
             else Some(StructType(partCols.map(c => logical(c)))),
@@ -2217,7 +2204,7 @@ object Versioned {
             .mode(SaveMode.ErrorIfExists)
           (if (partCols.isEmpty) w else w.partitionBy(partCols: _*)).parquet(tmp)
         }.get
-        maintenanceTick(spark, dir, protocol)
+        maintenanceTick(spark, dir)
         val added = addedDataDirs(spark, dir, v)
           .map(a => a.substring(a.lastIndexOf('/') + 1)).toSet
         val rows = lines(spark, dir, v).collect {
@@ -2234,7 +2221,6 @@ object Versioned {
     * retired or re-loading is intended. Returns the committed
     * version; None when the ledger is already empty. */
   def forgetIngestHistory(spark: SparkSession, dir: String,
-                          protocol: CommitProtocol = PutIfAbsentCommit,
                           maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
       val prev = latestVersion(spark, dir).getOrElse(
@@ -2244,30 +2230,26 @@ object Versioned {
       else {
         val v = prev + 1
         commitChild(spark, dir, v, prev,
-          ls.filterNot(_.isInstanceOf[IngestEntry]), Seq("-ingest"), protocol)
+          ls.filterNot(_.isInstanceOf[IngestEntry]), Seq("-ingest"))
         Some(v)
       }
     }
 
   /** Commit `df` as the next version. `SaveMode.Overwrite` starts the
     * table state from this write alone; `SaveMode.Append` extends the
-    * previous version's file set. Returns the committed version.
-    * `protocol` picks the commit primitive for the storage:
-    * [[PutIfAbsentCommit]] (the safe-everywhere default) or
-    * [[RenameCommit]] (opt-in for HDFS deployments). */
+    * previous version's file set. Returns the committed version. */
   def writeVersion(df: DataFrame, dir: String,
-                   mode: SaveMode = SaveMode.Overwrite,
-                   protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                   mode: SaveMode = SaveMode.Overwrite): Int = {
     // omitted GENERATED columns fill, and a renamed chain's APPEND
     // lands PHYSICAL column names (an overwrite resets the physical
     // layout from its own files and needs no translation —
     // writeVersionCore drops the mapping): one manifest resolve
     val (out, idFilled) = prepareWrite(df, dir, translate = mode == SaveMode.Append)
-    val v = writeVersionCore(df.sparkSession, dir, protocol, mode, txn = None,
+    val v = writeVersionCore(df.sparkSession, dir, mode, txn = None,
       identityBasis = idFilled)(tmp =>
       optimizeWriteShape(out, dir, Seq.empty).write
         .mode(SaveMode.ErrorIfExists).parquet(tmp)).get
-    maintenanceTick(df.sparkSession, dir, protocol)
+    maintenanceTick(df.sparkSession, dir)
     v
   }
 
@@ -2282,7 +2264,7 @@ object Versioned {
     * [[ManifestStore]] rewrite hook: `write` receives the immutable
     * data-dir path for the new version and must produce the complete
     * parquet state there; the version becomes visible only when the
-    * manifest commits through `protocol` afterwards.
+    * manifest commits afterwards.
     *
     * The commit also records (a) the version's union schema and (b)
     * the new dir's column min/max/null stats, both harvested from the
@@ -2290,10 +2272,9 @@ object Versioned {
     * commit), never O(table) — so reads plan with zero footer access
     * and selective reads can skip whole dirs. */
   def writeVersionWith(spark: SparkSession, dir: String,
-                       protocol: CommitProtocol = PutIfAbsentCommit,
                        mode: SaveMode = SaveMode.Overwrite)
                       (write: String => Unit): Int =
-    writeVersionCore(spark, dir, protocol, mode, txn = None)(write).get
+    writeVersionCore(spark, dir, mode, txn = None)(write).get
 
   /** Exactly-once STREAMING sink commit (Delta's (appId, batchId)
     * idempotent-txn design, public in the Delta paper/docs): commit
@@ -2309,7 +2290,6 @@ object Versioned {
     * a skipped replay. */
   def writeVersionStreamBatch(df: DataFrame, dir: String, appId: String,
                               batchId: Long, mode: SaveMode = SaveMode.Append,
-                              protocol: CommitProtocol = PutIfAbsentCommit,
                               maxAttempts: Int = 16,
                               partCols: Seq[String] = Seq.empty): Option[Int] = {
     require(appId.nonEmpty, "appId must be non-empty")
@@ -2319,7 +2299,7 @@ object Versioned {
         // columns) PER ATTEMPT: a concurrent rename between OCC
         // retries must not leave this batch's files under stale names
         val (out, idFilled) = prepareWrite(df, dir, translate = mode == SaveMode.Append)
-        writeVersionCore(df.sparkSession, dir, protocol, mode,
+        writeVersionCore(df.sparkSession, dir, mode,
           txn = Some((appId, batchId)), identityBasis = idFilled)(tmp =>
           optimizeWriteShape(out, dir, Seq.empty).write
             .mode(SaveMode.ErrorIfExists).parquet(tmp))
@@ -2349,9 +2329,9 @@ object Versioned {
         if (out.isEmpty) {
           if (mode == SaveMode.Append) None
           else emptyPartitionedStreamCommit(df.sparkSession, dir, appId, batchId,
-            schema, partCols, protocol)
+            schema, partCols)
         } else {
-          writeVersionCore(df.sparkSession, dir, protocol, mode,
+          writeVersionCore(df.sparkSession, dir, mode,
             txn = Some((appId, batchId)),
             partitionBy = Some(StructType(partCols.map(c => schema(c)))),
             identityBasis = idFilled)(tmp =>
@@ -2364,7 +2344,7 @@ object Versioned {
       else attempt()
     // the epoch stream is THE small-file generator autoCompact exists
     // for — tick after every committed (not replayed/empty) epoch
-    if (r.nonEmpty) maintenanceTick(df.sparkSession, dir, protocol)
+    if (r.nonEmpty) maintenanceTick(df.sparkSession, dir)
     r
   }
 
@@ -2373,8 +2353,8 @@ object Versioned {
     * carried, txn watermark, zero data dirs. */
   private def emptyPartitionedStreamCommit(spark: SparkSession, dir: String,
                                            appId: String, batchId: Long,
-                                           schema: StructType, partCols: Seq[String],
-                                           protocol: CommitProtocol): Option[Int] = {
+                                           schema: StructType,
+                                           partCols: Seq[String]): Option[Int] = {
     val prev = latestVersion(spark, dir)
     val replay = prev.exists(p => lines(spark, dir, p).collectFirst {
       case TxnEntry(b, a) if a == appId => b }.exists(batchId <= _))
@@ -2392,7 +2372,7 @@ object Versioned {
     commitManifest(spark, dir, v,
       (SchemaEntry(asNullable(ordered)) +:
         (Seq[Line](PartitionEntry(partCols)) ++ carried :+
-          TxnEntry(batchId, appId))).map(renderLine), protocol)
+          TxnEntry(batchId, appId))).map(renderLine))
     Some(v)
   }
 
@@ -2412,9 +2392,8 @@ object Versioned {
     * + atomic manifest commit — the post-write half of writeVersion.
     * A lost version race surfaces (overwrite semantics). */
   private[graft] def commitStagedOverwrite(spark: SparkSession, dir: String,
-                                           dataDir: String,
-                                           protocol: CommitProtocol = PutIfAbsentCommit): Int =
-    writeVersionCore(spark, dir, protocol, SaveMode.Overwrite, txn = None,
+                                           dataDir: String): Int =
+    writeVersionCore(spark, dir, SaveMode.Overwrite, txn = None,
       preWritten = Some(dataDir))(_ => ()).get
 
   /** FILE-GRANULAR copy-on-write commit (Delta's rewrite-touched-files
@@ -2449,7 +2428,6 @@ object Versioned {
                                        replacementDir: Option[String],
                                        partCols: Seq[String],
                                        dvSnapshot: Seq[(String, String)],
-                                       protocol: CommitProtocol = PutIfAbsentCommit,
                                        maxAttempts: Int = 16,
                                        exclusivePartitions: Set[Seq[Option[String]]] =
                                          Set.empty,
@@ -2777,7 +2755,7 @@ object Versioned {
         case PdvEntry(n) if droppedDvNames.contains(n) => None
         case other => Some(other)
       } ++ newEntries ++ hwmRw ++ feedLines ++ featRw ++ pdvEntry.toSeq
-      commitChild(spark, dir, v, prev, fullLines, ops.result(), protocol)
+      commitChild(spark, dir, v, prev, fullLines, ops.result())
       Some(v)
     }
   }
@@ -2797,7 +2775,6 @@ object Versioned {
   private[graft] def commitDynamicPartitionOverwrite(spark: SparkSession, dir: String,
                                                      stagedHive: String,
                                                      partCols: Seq[String],
-                                                     protocol: CommitProtocol = PutIfAbsentCommit,
                                                      identityBasis: Option[Int] = None)
       : Option[Int] = {
     val (fs, root) = fsFor(spark, dir)
@@ -2830,7 +2807,7 @@ object Versioned {
       case PdvEntry(n) => (PdvSnapshotKey, n)
     }
     commitFileRewrite(spark, dir, victims, Some(stagedHive), partCols, dvSnapshot,
-      protocol, exclusivePartitions = touched, preHarvested = Some(harvested),
+      exclusivePartitions = touched, preHarvested = Some(harvested),
       identityBasis = identityBasis)
   }
 
@@ -2838,8 +2815,7 @@ object Versioned {
     * only the partitions present in `df` are replaced; all others
     * carry verbatim. Returns the committed version, None for an
     * empty input. */
-  def writeVersionPartitionedDynamic(df: DataFrame, dir: String, partCols: Seq[String],
-                                     protocol: CommitProtocol = PutIfAbsentCommit)
+  def writeVersionPartitionedDynamic(df: DataFrame, dir: String, partCols: Seq[String])
       : Option[Int] = {
     require(partCols.nonEmpty, "partCols must be non-empty")
     val spark = df.sparkSession
@@ -2851,9 +2827,9 @@ object Versioned {
     optimizeWriteShape(outDyn, dir, partCols).write
       .partitionBy(partCols: _*).mode(SaveMode.ErrorIfExists)
       .parquet(new Path(new Path(dir), staged).toString)
-    val r = commitDynamicPartitionOverwrite(spark, dir, staged, partCols, protocol,
+    val r = commitDynamicPartitionOverwrite(spark, dir, staged, partCols,
       identityBasis = idFilledDyn)
-    if (r.nonEmpty) maintenanceTick(spark, dir, protocol)
+    if (r.nonEmpty) maintenanceTick(spark, dir)
     r
   }
 
@@ -2871,7 +2847,6 @@ object Versioned {
   private[graft] def commitStagedTable(spark: SparkSession, dir: String,
                                        stagedDir: String, declared: StructType,
                                        partCols: Seq[String], fresh: Boolean,
-                                       protocol: CommitProtocol = PutIfAbsentCommit,
                                        replaceDefinition: Boolean = true): Int = {
     val (fs, root) = fsFor(spark, dir)
     val stagedPath = new Path(root, stagedDir)
@@ -2881,7 +2856,7 @@ object Versioned {
       val partitionBy =
         if (partCols.isEmpty) None
         else Some(StructType(partCols.map(c => declared(c))))
-      writeVersionCore(spark, dir, protocol, SaveMode.Overwrite, txn = None,
+      writeVersionCore(spark, dir, SaveMode.Overwrite, txn = None,
         partitionBy = partitionBy, preWritten = Some(stagedDir),
         requireFresh = fresh, replaceDefinition = replaceDefinition)(_ => ()).get
     } else if (fresh) {
@@ -2890,7 +2865,7 @@ object Versioned {
       // non-nullable column is an artifact of the query, not a
       // declared contract — NOT NULL comes from explicit CREATE TABLE
       // column syntax or CALL system.set_not_null)
-      createTable(spark, dir, asNullable(declared), partCols, protocol)
+      createTable(spark, dir, asNullable(declared), partCols)
     } else {
       // empty REPLACE over an existing chain: a metadata-only
       // overwrite version — schema (and spec) kept, zero data dirs.
@@ -2921,7 +2896,7 @@ object Versioned {
         ((if (partCols.isEmpty) Seq.empty[Line] else Seq[Line](PartitionEntry(partCols))) ++
           carried)
       val v = prev + 1
-      commitManifest(spark, dir, v, ls.map(renderLine), protocol)
+      commitManifest(spark, dir, v, ls.map(renderLine))
       v
     }
   }
@@ -2945,8 +2920,7 @@ object Versioned {
     * chain refuses. Partition column types are the hive-path-exact
     * set (string/int/long/short/byte/date/boolean). */
   def writeVersionPartitioned(df: DataFrame, dir: String, partCols: Seq[String],
-                              mode: SaveMode = SaveMode.Overwrite,
-                              protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                              mode: SaveMode = SaveMode.Overwrite): Int = {
     require(partCols.nonEmpty, "partCols must be non-empty — use writeVersion")
     // omitted GENERATED columns fill first (they may BE the partition
     // columns — partition-by-derived-date is the canonical use); a
@@ -2963,11 +2937,11 @@ object Versioned {
     // recorded read order: data columns first, partition columns last
     // (what Spark's partitioned reader emits)
     val partSchema = StructType(partCols.map(c => schema(c)))
-    val v = writeVersionCore(df.sparkSession, dir, protocol, mode, txn = None,
+    val v = writeVersionCore(df.sparkSession, dir, mode, txn = None,
       partitionBy = Some(partSchema), identityBasis = idFilled)(tmp =>
       optimizeWriteShape(out, dir, partCols).write
         .partitionBy(partCols: _*).mode(SaveMode.ErrorIfExists).parquet(tmp)).get
-    maintenanceTick(df.sparkSession, dir, protocol)
+    maintenanceTick(df.sparkSession, dir)
     v
   }
 
@@ -3017,8 +2991,7 @@ object Versioned {
     * the committed version, None when fewer than `minDirs` qualify. */
   def compactSmallDirs(spark: SparkSession, dir: String,
                        targetBytes: Long = 128L * 1024 * 1024,
-                       minDirs: Int = 8, maxDirs: Int = 64,
-                       protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
+                       minDirs: Int = 8, maxDirs: Int = 64): Option[Int] = {
     require(minDirs >= 2, "minDirs must be at least 2 — compacting one dir is a no-op")
     require(targetBytes > 0 && maxDirs >= minDirs,
       s"need targetBytes > 0 and maxDirs >= minDirs, got $targetBytes/$maxDirs/$minDirs")
@@ -3054,7 +3027,7 @@ object Versioned {
       case PdvEntry(n)            => (PdvSnapshotKey, n)
     }
     try commitFileRewrite(spark, dir, removed, Some(staged), partCols, dvSnapshot,
-      protocol, dataChange = false)
+      dataChange = false)
     catch { case t: Throwable => fs.delete(stagedPath, true); throw t }
   }
 
@@ -3071,8 +3044,7 @@ object Versioned {
     * the mask physically" keeps holding). Returns None when the
     * manifest predates file lists or the table is empty — callers
     * fall back to the legacy overwrite. */
-  private[ext] def rewriteAllAsRearrange(spark: SparkSession, dir: String,
-                                         protocol: CommitProtocol)
+  private[ext] def rewriteAllAsRearrange(spark: SparkSession, dir: String)
                                         (shape: DataFrame => DataFrame): Option[Int] = {
     val v0 = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
@@ -3098,7 +3070,7 @@ object Versioned {
       case PdvEntry(n)            => (PdvSnapshotKey, n)
     }
     try commitFileRewrite(spark, dir, removed, Some(staged), Seq.empty, dvSnapshot,
-      protocol, dataChange = false, dropDvs = true)
+      dataChange = false, dropDvs = true)
     catch { case t: Throwable => fs.delete(stagedPath, true); throw t }
   }
 
@@ -3116,8 +3088,7 @@ object Versioned {
     * fails on it (data it may not have served vanished — that is a
     * data change, nothing like a rearrangement). Returns the missing
     * (dirName, fileName) pairs; empty = clean, and nothing commits. */
-  def fsck(spark: SparkSession, dir: String, repair: Boolean = false,
-           protocol: CommitProtocol = PutIfAbsentCommit): Seq[(String, String)] = {
+  def fsck(spark: SparkSession, dir: String, repair: Boolean = false): Seq[(String, String)] = {
     val v0 = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
     val ls = lines(spark, dir, v0)
@@ -3152,7 +3123,7 @@ object Versioned {
         case ScopedDvEntry(k, n, _) => (k, n)
         case PdvEntry(n)            => (PdvSnapshotKey, n)
       }
-      commitFileRewrite(spark, dir, removed, None, partCols, dvSnapshot, protocol)
+      commitFileRewrite(spark, dir, removed, None, partCols, dvSnapshot)
     }
     missing
   }
@@ -3168,8 +3139,7 @@ object Versioned {
     * Keys are dotted-word-shaped, values one-line — both embed in the
     * manifest. Returns the committed version. */
   def setTableProperties(spark: SparkSession, dir: String,
-                         props: Map[String, String],
-                         protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                         props: Map[String, String]): Int = {
     require(props.nonEmpty, "SET TBLPROPERTIES needs at least one key")
     props.foreach { case (k, x) =>
       require(k.matches("[A-Za-z0-9_.\\-]+"),
@@ -3186,15 +3156,14 @@ object Versioned {
       case _ => false
     } ++ entries
     val v = prev + 1
-    commitChild(spark, dir, v, prev, fullLines, entries.map(addOp), protocol)
+    commitChild(spark, dir, v, prev, fullLines, entries.map(addOp))
     v
   }
 
   /** `ALTER TABLE … UNSET TBLPROPERTIES`: drop the named keys (missing
     * keys are a no-op — the UNSET IF EXISTS contract). Returns the
     * committed version, None when nothing matched (no empty commit). */
-  def unsetTableProperties(spark: SparkSession, dir: String, keys: Seq[String],
-                           protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
+  def unsetTableProperties(spark: SparkSession, dir: String, keys: Seq[String]): Option[Int] = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES needs at least one key")
     val prev = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
@@ -3208,7 +3177,7 @@ object Versioned {
     }
     val v = prev + 1
     commitChild(spark, dir, v, prev, fullLines,
-      present.sorted.map(k => s"-prop:$k"), protocol)
+      present.sorted.map(k => s"-prop:$k"))
     Some(v)
   }
 
@@ -3295,10 +3264,9 @@ object Versioned {
     * clusters the increment — small files included), then auto
     * compaction for tables that only declared that. Each section is
     * independently gated and independently failure-isolated. */
-  private def maintenanceTick(spark: SparkSession, dir: String,
-                              protocol: CommitProtocol): Unit = {
-    autoClusterTick(spark, dir, protocol)
-    autoCompactTick(spark, dir, protocol)
+  private def maintenanceTick(spark: SparkSession, dir: String): Unit = {
+    autoClusterTick(spark, dir)
+    autoCompactTick(spark, dir)
   }
 
   /** Post-commit AUTO CLUSTER tick (Delta liquid clustering's
@@ -3314,8 +3282,7 @@ object Versioned {
     * committed, so a tick failure drops with a warning and the next
     * write re-probes. No recursion: the rearrange commits through
     * commitFileRewrite, which never ticks. */
-  private def autoClusterTick(spark: SparkSession, dir: String,
-                              protocol: CommitProtocol): Unit = {
+  private def autoClusterTick(spark: SparkSession, dir: String): Unit = {
     val cols = effectiveSetting(spark, dir, "spark.graft.autoCluster.columns",
         "graft.autoCluster.columns")
       .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
@@ -3341,7 +3308,7 @@ object Versioned {
         if (bytes >= math.max(1L, minBytes)) {
           Maintenance.zorderVersionedIncremental(spark, dir, cols,
             nFiles = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong).toInt,
-            bits = bits, protocol = protocol)
+            bits = bits)
           ()
         }
       }
@@ -3362,8 +3329,7 @@ object Versioned {
     * tick failure — an OCC loss to a concurrent writer, a legacy
     * manifest — must not fail the write that triggered it: it drops,
     * and the next write re-probes. */
-  private def autoCompactTick(spark: SparkSession, dir: String,
-                              protocol: CommitProtocol): Unit = {
+  private def autoCompactTick(spark: SparkSession, dir: String): Unit = {
     // session conf wins both ways; else the TABLE PROPERTY
     // `graft.autoCompact.enabled` (Delta's autoOptimize layering)
     if (!effectiveSetting(spark, dir, "spark.graft.autoCompact.enabled",
@@ -3376,8 +3342,7 @@ object Versioned {
       compactSmallDirs(spark, dir,
         targetBytes = num("targetBytes", 128L * 1024 * 1024),
         minDirs = num("minDirs", 8L).toInt,
-        maxDirs = num("maxDirs", 64L).toInt,
-        protocol = protocol)
+        maxDirs = num("maxDirs", 64L).toInt)
       ()
     } catch {
       case scala.util.control.NonFatal(t) => log.warn(
@@ -3388,7 +3353,7 @@ object Versioned {
   }
 
   private def writeVersionCore(spark: SparkSession, dir: String,
-                               protocol: CommitProtocol, mode: SaveMode,
+                               mode: SaveMode,
                                txn: Option[(String, Long)],
                                partitionBy: Option[StructType] = None,
                                extraLines: Seq[Line] = Seq.empty,
@@ -3833,9 +3798,9 @@ object Versioned {
         hwmLines.foreach(l => ops += addOp(l)) // replace-by-col semantics
         ops += addOp(DataEntry(dataDir))
         ops += addOp(stats)
-        commitChild(spark, dir, v, p, newLines, ops.result(), protocol)
+        commitChild(spark, dir, v, p, newLines, ops.result())
       case _ =>
-        commitManifest(spark, dir, v, newLines.map(renderLine), protocol)
+        commitManifest(spark, dir, v, newLines.map(renderLine))
     }
     Some(v)
   }
@@ -3909,17 +3874,14 @@ object Versioned {
   }
 
   /** The commit point, factored so the conflict guard is directly
-    * testable: publish the manifest through the protocol's atomic
-    * put-if-absent. Losing the claim (an existing manifest for `v`)
-    * surfaces the concurrent writer instead of silently dropping one
-    * — under [[PutIfAbsentCommit]] via the conditional create itself,
-    * under [[RenameCommit]] via the HDFS rename-to-existing failure
-    * (best-effort pre-check on POSIX). */
+    * testable: publish the manifest through the atomic
+    * [[Commit.putIfAbsent]]. Losing the claim (an existing manifest
+    * for `v`) surfaces the concurrent writer instead of silently
+    * dropping one. */
   /** Returns the in-commit timestamp stamped on the manifest, so the
     * delta path's checkpoint sidecar can carry the same clock. */
   private[graft] def commitManifest(spark: SparkSession, dir: String, v: Int,
-                                    dirs: Seq[String],
-                                    protocol: CommitProtocol = PutIfAbsentCommit): Long = {
+                                    dirs: Seq[String]): Long = {
     val (fs, root) = fsFor(spark, dir)
     fs.mkdirs(new Path(root, VDIR))
     // stamp the IN-COMMIT timestamp at the single commit seam, forced
@@ -3947,7 +3909,7 @@ object Versioned {
       case None    => s"ts:$ts" +: s"protocol:$SupportedProtocol" +: body
     }
     val bytes = (stamped.mkString("\n") + "\n").getBytes("UTF-8")
-    if (!protocol.putIfAbsent(fs, manifestPath(dir, v), bytes))
+    if (!Commit.putIfAbsent(fs, manifestPath(dir, v), bytes))
       throw new IllegalStateException(
         s"version $v at $dir was committed concurrently — retry the write")
     // a SUCCESSFUL claim proves any cached parse under this key
@@ -4025,9 +3987,8 @@ object Versioned {
   def maxDvKeys(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.dv.maxKeys").map(_.toLong).getOrElse(10L * 1000 * 1000)
 
-  def deleteByKeys(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String,
-                   protocol: CommitProtocol = PutIfAbsentCommit): Int =
-    deleteByKeysCore(spark, dir, keys, keyCol, protocol, scoped = false)
+  def deleteByKeys(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String): Int =
+    deleteByKeysCore(spark, dir, keys, keyCol, scoped = false)
 
   /** [[deleteByKeys]] with SQL DELETE semantics: the mask is SCOPED to
     * the data dirs present at commit time, so rows appended AFTER the
@@ -4035,19 +3996,17 @@ object Versioned {
     * (the reference's SQL DELETE removes current rows only). The SQL
     * catalog's DELETE routes here; the unscoped form stays the
     * library's key-level erasure contract. */
-  def deleteByKeysScoped(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String,
-                         protocol: CommitProtocol = PutIfAbsentCommit): Int =
-    deleteByKeysCore(spark, dir, keys, keyCol, protocol, scoped = true)
+  def deleteByKeysScoped(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String): Int =
+    deleteByKeysCore(spark, dir, keys, keyCol, scoped = true)
 
   def deleteByKeysScopedWithRetry(spark: SparkSession, dir: String,
                                   keys: DataFrame, keyCol: String,
-                                  protocol: CommitProtocol = PutIfAbsentCommit,
                                   maxAttempts: Int = 16): Int =
     withCommitRetry(maxAttempts)(() =>
-      deleteByKeysCore(spark, dir, keys, keyCol, protocol, scoped = true))
+      deleteByKeysCore(spark, dir, keys, keyCol, scoped = true))
 
   private def deleteByKeysCore(spark: SparkSession, dir: String, keys: DataFrame,
-                               keyCol0: String, protocol: CommitProtocol,
+                               keyCol0: String,
                                scoped: Boolean): Int = {
     require(keyCol0.matches("[A-Za-z0-9_]+"),
       s"keyCol must be word-shaped (it is embedded in the manifest), got '$keyCol0'")
@@ -4103,7 +4062,7 @@ object Versioned {
         lines(spark, dir, prev).collect { case DataEntry(n) => n })
       else DvEntry(keyCol, dvDir)
     commitChild(spark, dir, v, prev,
-      lines(spark, dir, prev) :+ dv, Seq(addOp(dv)), protocol)
+      lines(spark, dir, prev) :+ dv, Seq(addOp(dv)))
     v
   }
 
@@ -4135,20 +4094,18 @@ object Versioned {
     * or INSERT OVERWRITE of the complement read) and refuses with
     * that remedy. */
   def deleteWhere(spark: SparkSession, dir: String, predicateSql: String,
-                  protocol: CommitProtocol = PutIfAbsentCommit,
                   maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
-      deleteWhereCore(spark, dir, Left(predicateSql), protocol)
+      deleteWhereCore(spark, dir, Left(predicateSql))
     }
 
   /** [[deleteWhere]] over pre-translated V1 filters (LOGICAL names) —
     * the SQL catalog's non-key DELETE routes here. */
   private[graft] def deleteWherePositional(spark: SparkSession, dir: String,
                                            filters: Seq[org.apache.spark.sql.sources.Filter],
-                                           protocol: CommitProtocol = PutIfAbsentCommit,
                                            maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
-      deleteWhereCore(spark, dir, Right(filters), protocol)
+      deleteWhereCore(spark, dir, Right(filters))
     }
 
   /** A V1 filter as a Column predicate — the mirror of Spark's
@@ -4182,8 +4139,8 @@ object Versioned {
   }
 
   private def deleteWhereCore(spark: SparkSession, dir: String,
-                              predicate: Either[String, Seq[org.apache.spark.sql.sources.Filter]],
-                              protocol: CommitProtocol): Option[Int] = {
+                              predicate: Either[String, Seq[org.apache.spark.sql.sources.Filter]])
+      : Option[Int] = {
     import org.apache.spark.sql.functions.{col, expr, lit, when}
     val (fs, root) = fsFor(spark, dir)
     val prev = latestVersion(spark, dir).getOrElse(
@@ -4285,7 +4242,7 @@ object Versioned {
                       case _ => false }) Seq.empty
       else Seq(FeatureEntry("pdv", required = true))
     commitChild(spark, dir, v, prev, (ls ++ feat) :+ pdv,
-      feat.map(addOp) :+ addOp(pdv), protocol)
+      feat.map(addOp) :+ addOp(pdv))
     Some(v)
   }
 
@@ -4302,7 +4259,6 @@ object Versioned {
     * metadata commit. Returns the committed version; None when the
     * feature was never declared. */
   def dropTableFeature(spark: SparkSession, dir: String, feature: String,
-                       protocol: CommitProtocol = PutIfAbsentCommit,
                        maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
       val prev = latestVersion(spark, dir).getOrElse(
@@ -4324,7 +4280,7 @@ object Versioned {
       commitChild(spark, dir, v, prev,
         ls.filterNot { case FeatureEntry(n, _) => n.equalsIgnoreCase(feature)
                        case _ => false },
-        Seq(s"-feature:$feature"), protocol)
+        Seq(s"-feature:$feature"))
       Some(v)
     }
 
@@ -4351,7 +4307,6 @@ object Versioned {
     * manifest race retries against the refreshed chain. Returns the
     * new version, or None when nothing would change. */
   def compactDeletionVectors(spark: SparkSession, dir: String,
-                             protocol: CommitProtocol = PutIfAbsentCommit,
                              maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
       val (fs, root) = fsFor(spark, dir)
@@ -4443,7 +4398,7 @@ object Versioned {
           l.isInstanceOf[DvEntry] || l.isInstanceOf[ScopedDvEntry] ||
             l.isInstanceOf[PdvEntry]) ++
           merged ++ scopedOut.map(_._1) ++ pdvOut
-        commitChild(spark, dir, v, prev, kept, ops.result(), protocol)
+        commitChild(spark, dir, v, prev, kept, ops.result())
         Some(v)
       }
     }
@@ -4527,7 +4482,6 @@ object Versioned {
     * skip. Returns the new version, or None when the manifest already
     * carries schema + full stats. */
   def backfillStats(spark: SparkSession, dir: String,
-                    protocol: CommitProtocol = PutIfAbsentCommit,
                     maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
       val (_, root) = fsFor(spark, dir)
@@ -4579,7 +4533,7 @@ object Versioned {
         }
         commitChild(spark, dir, v, prev,
           SchemaEntry(schema) +: (kept ++ externalized),
-          addOp(SchemaEntry(schema)) +: externalized.map(addOp), protocol)
+          addOp(SchemaEntry(schema)) +: externalized.map(addOp))
         Some(v)
       }
     }
@@ -5267,7 +5221,6 @@ object Versioned {
     * appends assign incrementally. Returns the backfill version (= the
     * declaration version on an empty table). */
   def enableRowTracking(spark: SparkSession, dir: String,
-                        protocol: CommitProtocol = PutIfAbsentCommit,
                         maxAttempts: Int = 16): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, monotonically_increasing_id, col => fcol}
     val v0 = latestVersion(spark, dir).getOrElse(
@@ -5283,7 +5236,7 @@ object Versioned {
     addColumns(spark, dir, Seq(org.apache.spark.sql.types.StructField(
       RowIdCol, org.apache.spark.sql.types.LongType, nullable = true,
       identityMetadata(org.apache.spark.sql.types.Metadata.empty,
-        start = 0L, step = 1L, allowExplicitInsert = true))), protocol)
+        start = 0L, step = 1L, allowExplicitInsert = true))))
     // 2. backfill: every EXISTING row gets its id in one rearrange
     withCommitRetry(maxAttempts) { () =>
       val v = latestVersion(spark, dir).get
@@ -5316,7 +5269,7 @@ object Versioned {
         // the staged footers' bounds — the same atomic-claim contract
         // as every identity write
         commitFileRewrite(spark, dir, victims, Some(staged), partCols,
-          dvSnapshot, protocol, dataChange = false).getOrElse(v)
+          dvSnapshot, dataChange = false).getOrElse(v)
       }
     }
   }
@@ -5368,13 +5321,12 @@ object Versioned {
     * in hand; a first commit (no previous version) records nothing
     * (Delta's CDF starts at the second commit too). Overwrite
     * semantics — a lost race surfaces, as for every overwrite. */
-  def writeVersionWithChangeFeed(df: DataFrame, dir: String, keys: Seq[String],
-                                 protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+  def writeVersionWithChangeFeed(df: DataFrame, dir: String, keys: Seq[String]): Int = {
     val spark = df.sparkSession
     keys.foreach(k => require(k.matches("[A-Za-z0-9_]+"),
       s"key column must be word-shaped (it is embedded in the manifest), got '$k'"))
     latestVersion(spark, dir) match {
-      case None => writeVersion(df, dir, SaveMode.Overwrite, protocol)
+      case None => writeVersion(df, dir, SaveMode.Overwrite)
       case Some(p) =>
         val v = p + 1
         val (_, root) = fsFor(spark, dir)
@@ -5384,7 +5336,7 @@ object Versioned {
         // the data dir; a lost commit race leaves it an orphan)
         diffFeedFrames(readVersion(spark, dir, p), df, keys)
           .write.mode(SaveMode.ErrorIfExists).parquet(new Path(root, chDir).toString)
-        writeVersionCore(spark, dir, protocol, SaveMode.Overwrite, txn = None,
+        writeVersionCore(spark, dir, SaveMode.Overwrite, txn = None,
           extraLines = Seq(ChangesEntry(p, v, keys, chDir)))(tmp =>
           df.write.mode(SaveMode.ErrorIfExists).parquet(tmp)).get
     }
@@ -5554,55 +5506,44 @@ object Versioned {
     * to the caller (who may no longer want the overwrite at all) —
     * the same reason Delta fails conflicting non-commutative commits.
     *
-    * Multi-writer safety holds exactly when the protocol's
-    * putIfAbsent is ATOMIC on the storage: [[PutIfAbsentCommit]]
-    * (the default) everywhere — conditional PUT on object stores,
-    * hardlink on local POSIX — and [[RenameCommit]] only under HDFS
-    * semantics where rename-to-existing FAILS. On POSIX,
-    * RenameCommit's rename silently REPLACES, so two local racers can
-    * both "win" and one commit is lost — measured (the racing spec
-    * fails under local RenameCommit by design of POSIX, passes under
-    * the default); RenameCommit is therefore opt-in, with its
-    * documented single-writer caveat. */
+    * Multi-writer safety rests on [[Commit.putIfAbsent]] being ATOMIC
+    * on every scheme: conditional PUT on object stores, hardlink on
+    * local POSIX, and rename-to-existing failing on HDFS. */
   def appendVersionWithRetry(df: DataFrame, dir: String,
-                             protocol: CommitProtocol = PutIfAbsentCommit,
                              maxAttempts: Int = 16): Int =
     withCommitRetry(maxAttempts)(() =>
-      writeVersion(df, dir, SaveMode.Append, protocol))
+      writeVersion(df, dir, SaveMode.Append))
 
   /** Multi-writer [[writeVersionPartitioned]] append — same
     * commutative-append retry contract as [[appendVersionWithRetry]],
     * for the partitioned chains (the SQL INSERT INTO path). */
   def appendVersionPartitionedWithRetry(df: DataFrame, dir: String,
                                         partCols: Seq[String],
-                                        protocol: CommitProtocol = PutIfAbsentCommit,
                                         maxAttempts: Int = 16): Int =
     withCommitRetry(maxAttempts)(() =>
-      writeVersionPartitioned(df, dir, partCols, SaveMode.Append, protocol))
+      writeVersionPartitioned(df, dir, partCols, SaveMode.Append))
 
   /** Multi-writer [[deleteByKeys]] — key-masking commutes with
     * concurrent appends and other key deletes, so the same bounded
     * retry applies. */
   def deleteByKeysWithRetry(spark: SparkSession, dir: String,
                             keys: DataFrame, keyCol: String,
-                            protocol: CommitProtocol = PutIfAbsentCommit,
                             maxAttempts: Int = 16): Int =
     withCommitRetry(maxAttempts)(() =>
-      deleteByKeys(spark, dir, keys, keyCol, protocol))
+      deleteByKeys(spark, dir, keys, keyCol))
 
   /** Delta `RESTORE TABLE … TO VERSION AS OF v` role: commit version
     * v's manifest — file list, schema, and stats — as the newest
     * version. No data is copied or rewritten (the manifest
     * re-references v's immutable dirs), and the restore itself is a
     * new version, so it is also undoable. Returns the new version id. */
-  def restoreVersion(spark: SparkSession, dir: String, v: Int,
-                     protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+  def restoreVersion(spark: SparkSession, dir: String, v: Int): Int = {
     // RESOLVED state, written FULL: a restored delta would otherwise
     // depend on a parent chain that retention may later reclaim, and
     // the restore's content is v's state, not a delta against latest
     val resolved = lines(spark, dir, v) // validates v exists
     val next = latestVersion(spark, dir).get + 1
-    commitManifest(spark, dir, next, resolved.map(renderLine), protocol)
+    commitManifest(spark, dir, next, resolved.map(renderLine))
     next
   }
 
@@ -5624,7 +5565,6 @@ object Versioned {
     * version (always 0). */
   def createTable(spark: SparkSession, dir: String, schema: StructType,
                   partCols: Seq[String] = Seq.empty,
-                  protocol: CommitProtocol = PutIfAbsentCommit,
                   constraints: Seq[(String, String)] = Seq.empty,
                   props: Map[String, String] = Map.empty): Int = {
     require(schema.fields.nonEmpty, "cannot create a table with no columns")
@@ -5681,7 +5621,7 @@ object Versioned {
         notNull ++ constraints.map { case (n, sql) => ConstraintEntry(n, sql) } ++
         idSpecs.map(s => HwmEntry(s.col, s.start)) ++
         props.toSeq.sortBy(_._1).map { case (k, x) => PropEntry(k, x) })
-    commitManifest(spark, dir, 0, ls.map(renderLine), protocol)
+    commitManifest(spark, dir, 0, ls.map(renderLine))
     0
   }
 
@@ -5705,8 +5645,7 @@ object Versioned {
     * spec), commit as the next version — so a schema change is
     * itself history: time travel to the pre-ALTER version serves the
     * pre-ALTER schema. */
-  private def commitSchemaChange(spark: SparkSession, dir: String,
-                                 protocol: CommitProtocol)
+  private def commitSchemaChange(spark: SparkSession, dir: String)
                                 (change: (StructType, Seq[Line]) => StructType): Int = {
     val prev = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
@@ -5733,7 +5672,7 @@ object Versioned {
     }
     val v = prev + 1
     commitChild(spark, dir, v, prev, newLines,
-      addOp(SchemaEntry(next)) +: mapOps, protocol)
+      addOp(SchemaEntry(next)) +: mapOps)
     v
   }
 
@@ -5751,10 +5690,9 @@ object Versioned {
     * files — with the SAME type that is well-defined (the drop was
     * metadata-only too); with a DIFFERENT type the read fails on
     * those files. Add under a fresh name to start clean. */
-  def addColumns(spark: SparkSession, dir: String, cols: Seq[StructField],
-                 protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+  def addColumns(spark: SparkSession, dir: String, cols: Seq[StructField]): Int = {
     require(cols.nonEmpty, "no columns to add")
-    commitSchemaChange(spark, dir, protocol) { (prior, ls) =>
+    commitSchemaChange(spark, dir) { (prior, ls) =>
       val cmap = colMapOf(ls)
       val logicalLower = toLogicalSchema(prior, cmap)
         .fieldNames.map(_.toLowerCase).toSet
@@ -5785,10 +5723,9 @@ object Versioned {
     * (the mask could no longer be evaluated). For ERASURE semantics
     * a metadata drop is not enough — rewrite via
     * `writeVersion(readLatest(dir).drop(col), dir)` and prune. */
-  def dropColumns(spark: SparkSession, dir: String, names: Seq[String],
-                  protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+  def dropColumns(spark: SparkSession, dir: String, names: Seq[String]): Int = {
     require(names.nonEmpty, "no columns to drop")
-    commitSchemaChange(spark, dir, protocol) { (prior, ls) =>
+    commitSchemaChange(spark, dir) { (prior, ls) =>
       val cmap = colMapOf(ls)
       val logical = toLogicalSchema(prior, cmap)
       // callers name LOGICAL columns; the schema line and every guard
@@ -5879,8 +5816,7 @@ object Versioned {
         "with a line break")
 
   def addCheckConstraint(spark: SparkSession, dir: String, name: String,
-                         predicateSql: String,
-                         protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                         predicateSql: String): Int = {
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name must be word-shaped (it is embedded in the manifest), got '$name'")
     requireOneLine(predicateSql, name)
@@ -5897,15 +5833,14 @@ object Versioned {
         s"— e.g. ${violating.head()}")
     val v = prev + 1
     val c = ConstraintEntry(name, predicateSql)
-    commitChild(spark, dir, v, prev, ls :+ c, Seq(addOp(c)), protocol)
+    commitChild(spark, dir, v, prev, ls :+ c, Seq(addOp(c)))
     v
   }
 
   /** `ALTER TABLE … DROP CONSTRAINT`'s role: metadata-only removal.
     * Returns the new version, or None when no such constraint exists
     * (the caller decides whether that is an error — IF EXISTS). */
-  def dropCheckConstraint(spark: SparkSession, dir: String, name: String,
-                          protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
+  def dropCheckConstraint(spark: SparkSession, dir: String, name: String): Option[Int] = {
     val prev = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
     val ls = lines(spark, dir, prev)
@@ -5917,7 +5852,7 @@ object Versioned {
           case ConstraintEntry(n, _) => n.equalsIgnoreCase(name)
           case _ => false
         },
-        Seq(s"-constraint:$name"), protocol)
+        Seq(s"-constraint:$name"))
       Some(v)
     }
   }
@@ -5980,8 +5915,7 @@ object Versioned {
     * (partition / dv-key / constraint-referenced columns cannot be
     * dropped unless the referencing constraint is dropped in the SAME
     * statement). */
-  def alterTableAtomic(spark: SparkSession, dir: String, alter: AlterSpec,
-                       protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
+  def alterTableAtomic(spark: SparkSession, dir: String, alter: AlterSpec): Option[Int] = {
     if (alter.isEmpty) return None
     val prev = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
@@ -6233,8 +6167,7 @@ object Versioned {
           droppedHwm.map(c => s"-hwm:$c") ++ mapOps ++
           droppedBloomCols.map(c => s"-bloomcol:$c"))) ++
         alter.addChecks.map { case (n, sql) => addOp(ConstraintEntry(n, sql)) } ++
-        resolvedSet.map { case (_, p) => addOp(NotNullEntry(p)) },
-      protocol)
+        resolvedSet.map { case (_, p) => addOp(NotNullEntry(p)) })
     Some(v)
   }
 
@@ -6248,8 +6181,7 @@ object Versioned {
     * schema keeps working), deletion masks apply physically on the
     * way through, and the new files' footer harvest records EXACT
     * double stats. Deliberately a data job, priced like one. */
-  def widenFloatToDoubleRewrite(spark: SparkSession, dir: String, col: String,
-                                protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+  def widenFloatToDoubleRewrite(spark: SparkSession, dir: String, col: String): Int = {
     val prev = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
     val ls = lines(spark, dir, prev)
@@ -6265,8 +6197,8 @@ object Versioned {
     val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
     val df = readVersion(spark, dir, prev)
       .withColumn(l, org.apache.spark.sql.functions.col(l).cast("double"))
-    if (partCols.isEmpty) writeVersion(df, dir, SaveMode.Overwrite, protocol)
-    else writeVersionPartitioned(df, dir, partCols, SaveMode.Overwrite, protocol)
+    if (partCols.isEmpty) writeVersion(df, dir, SaveMode.Overwrite)
+    else writeVersionPartitioned(df, dir, partCols, SaveMode.Overwrite)
   }
 
   /** Delta `replaceWhere` / Spark SQL `INSERT INTO … REPLACE WHERE`'s
@@ -6309,7 +6241,6 @@ object Versioned {
     * Returns the committed version; None when the statement was a
     * complete no-op (no row matched AND `df` was empty). */
   def replaceWhere(df: DataFrame, dir: String, predicateSql: String,
-                   protocol: CommitProtocol = PutIfAbsentCommit,
                    maxAttempts: Int = 16,
                    // non-empty = RECORD the change feed in the same commit
                    // (writeVersionWithChangeFeed's role for the replace):
@@ -6444,7 +6375,7 @@ object Versioned {
       case PdvEntry(n)            => (PdvSnapshotKey, n)
     }
     try commitFileRewrite(spark, dir, removed, Some(staged), partCols,
-      dvSnapshot, protocol, maxAttempts, identityBasis = idBasis,
+      dvSnapshot, maxAttempts, identityBasis = idBasis,
       replaceConflict = Some((ls0.collect { case DataEntry(n) => n }.toSet,
         pushed, predicateSql)),
       changeFeed = feedDir)
@@ -6546,7 +6477,7 @@ object Versioned {
     * commit, and reclaiming it would make that writer's version
     * unreadable the moment it commits. Dirs referenced by a DROPPED
     * manifest were committed history and are reclaimed regardless of
-    * age. Crashed staging files in `_versions/` (both protocols'
+    * age. Crashed staging files in `_versions/` (both commit staging
     * prefixes) get the same age guard — a young one may be a commit
     * in flight. */
   /** `dryRun` reports exactly what a live call WOULD drop — versions,
@@ -6573,7 +6504,7 @@ object Versioned {
     if (!dryRun && drop.nonEmpty) keep.headOption.foreach { b =>
       if (manifestParent(spark, dir, b).nonEmpty &&
           !fs.exists(checkpointPath(dir, b)))
-        writeCheckpoint(spark, dir, b, lines(spark, dir, b), PutIfAbsentCommit)
+        writeCheckpoint(spark, dir, b, lines(spark, dir, b))
     }
     // live names span BOTH dir kinds: a deletion-vector dir referenced
     // by a surviving manifest is load-bearing (reclaiming it would
@@ -6637,8 +6568,8 @@ object Versioned {
       }
       // staging files from commits that crashed between create and
       // publish are invisible to readers but never self-clean; both
-      // protocols' staging prefixes are swept (`.tmp-` = RenameCommit,
-      // `.put-` = PutIfAbsentCommit's local emulation)
+      // staging prefixes of Commit.putIfAbsent are swept (`.tmp-` =
+      // the HDFS rename fallback, `.put-` = the local hardlink)
       // the sidecar dirs stage through the same tmp+rename discipline —
       // their crashed leftovers sweep with the same age guard
       (new Path(root, VDIR) +: Seq(bloomsDirPath(root), statsDirPath(root))

@@ -172,9 +172,9 @@ object Upsert {
     * ref: silver_to_gold_on_minio.py:131-144).
     *
     * Crash-safe swap protocol — holds under
-    * [[graft.ext.SwapStore]]'s substrate (HDFS/POSIX, where directory
-    * rename is atomic; for object stores use [[upsertTable]] with
-    * [[graft.ext.ManifestStore.conditionalPut]]): write merged →
+    * [[graft.ext.SwapStore]]'s substrate (a local disk, where directory
+    * rename is atomic; for object stores and HDFS use [[upsertTable]]
+    * with [[graft.ext.ManifestStore]]): write merged →
     * `__upsert_tmp`, move live → `__old`, move tmp → live, delete
     * `__old`. Every crash window is recovered on the next call: a
     * missing live dir with `__old` present is restored (the
@@ -189,11 +189,11 @@ object Upsert {
   /** [[upsertParquet]] over any [[graft.ext.TableStore]] — the commit
     * seam. With [[graft.ext.SwapStore]] (the default entry above)
     * the publish is the directory swap: fast, zero indirection,
-    * guaranteed where rename is atomic (HDFS/POSIX). With
-    * [[graft.ext.ManifestStore]] over [[graft.ext.PutIfAbsentCommit]]
-    * the merged state lands in an immutable uniquely-named data dir
-    * and becomes visible via ONE conditional manifest create — no
-    * rename on any commit path, which is what object stores
+    * local disk only. With [[graft.ext.ManifestStore]] the merged
+    * state lands in an immutable uniquely-named data dir and becomes
+    * visible via ONE manifest publish through the scheme-chosen
+    * [[graft.ext.Commit.putIfAbsent]] — a conditional create with no
+    * rename on an object-store path, which is what object stores
     * (S3A/MinIO, the reference's actual storage) require for the
     * crash-window guarantees to hold. Same merge semantics either
     * way; read the live state back with `store.readLive`. */
@@ -211,14 +211,30 @@ object Upsert {
       }
   }
 
+  /** The local directory a swap-store path names: a `file:` URI or a
+    * scheme-less path. Any other scheme is refused here, before
+    * anything is written — the swap publishes by local directory
+    * rename, which an object store or HDFS cannot serve. */
+  private[graft] def localDir(path: String): Path = {
+    val uri = new org.apache.hadoop.fs.Path(path).toUri
+    uri.getScheme match {
+      case null   => Paths.get(path)
+      case "file" => Paths.get(uri.getPath)
+      case scheme => throw new IllegalArgumentException(
+        s"the directory-swap store renames local directories and cannot publish " +
+          s"$path (scheme '$scheme'); use graft.ext.ManifestStore, which commits " +
+          "on any Hadoop filesystem")
+    }
+  }
+
   /** Recover from a previous interrupted [[atomicRewrite]]: a missing
     * live dir with `__old` present is restored, leftover `__old`/tmp
     * dirs beside a live dir are garbage-collected. Safe to call any
     * time; [[atomicRewrite]] calls it itself. */
   def recoverSwap(path: String): Unit = {
-    val dir = Paths.get(path)
-    val old = Paths.get(path.stripSuffix("/") + "__old")
-    val tmp = Paths.get(path.stripSuffix("/") + "__upsert_tmp")
+    val dir = localDir(path)
+    val old = Paths.get(s"${dir}__old")
+    val tmp = Paths.get(s"${dir}__upsert_tmp")
     if (!Files.exists(dir) && Files.exists(old))
       Files.move(old, dir, StandardCopyOption.ATOMIC_MOVE)
     if (Files.exists(old)) deleteRecursively(old)
@@ -230,19 +246,26 @@ object Upsert {
     * `write` produces the replacement table at the tmp path it is
     * handed — reading the CURRENT live dir is safe inside it, nothing
     * has moved yet — then live → `__old`, tmp → live, delete `__old`.
-    * Every crash window is recovered by [[recoverSwap]] on the next
-    * call. Holds where directory rename is atomic (HDFS/POSIX — the
-    * [[graft.ext.SwapStore]] substrate); on object stores the same
-    * rewrite goes through [[graft.ext.ManifestStore]] +
-    * [[graft.ext.PutIfAbsentCommit]] instead, where no rename is on
-    * the commit path. */
+    * A missing live dir is bootstrapped the same way, all-or-nothing
+    * (tmp → live), so a crashed bootstrap never leaves a partial dir a
+    * later call would read as the table. Every crash window is
+    * recovered by [[recoverSwap]] on the next call. Holds on a local
+    * disk only (see [[localDir]]); on object stores and HDFS the same
+    * rewrite goes through [[graft.ext.ManifestStore]], whose commit
+    * has no rename on an object-store path. */
   def atomicRewrite(path: String)(write: String => Unit): Unit = {
     recoverSwap(path)
-    val dir = Paths.get(path)
-    val old = Paths.get(path.stripSuffix("/") + "__old")
-    val tmp = Paths.get(path.stripSuffix("/") + "__upsert_tmp")
-    write(tmp.toString)
-    Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE)
+    val dir = localDir(path)
+    val old = Paths.get(s"${dir}__old")
+    val tmp = Paths.get(s"${dir}__upsert_tmp")
+    // hand the callback the plain name in the caller's form: a Hadoop
+    // path string is never percent-decoded, so `tmp.toUri` would send a
+    // `my gold` table's write to a literal `my%20gold` directory
+    val hadoopTmp =
+      if (new org.apache.hadoop.fs.Path(path).toUri.getScheme == null) tmp.toString
+      else new org.apache.hadoop.fs.Path("file", null, tmp.toString).toString
+    write(hadoopTmp)
+    if (Files.exists(dir)) Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
     deleteRecursively(old)
   }

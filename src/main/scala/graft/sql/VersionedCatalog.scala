@@ -1803,7 +1803,7 @@ private[graft] class ColumnMappedScan(val inner: Scan, colMap: Map[String, Strin
   * OVERWRITE` commits a fresh single-dir version and deliberately
   * SURFACES a lost race instead of retrying (it replaces state it has
   * not seen — the library's overwrite contract). Both publish through
-  * the manifest commit protocol: a crashed INSERT leaves only an
+  * the manifest commit, so a crashed INSERT leaves only an
   * invisible orphan dir, never a partial table. Served through the
   * V1Write seam — the insert IS a DataFrame write, so the whole
   * existing commit path (schema recording, footer stats harvest,

@@ -291,14 +291,13 @@ object Streams {
     * failure overwrites its own rows instead of duplicating them.
     *
     * `store` is the commit seam ([[graft.ext.TableStore]]): the
-    * default [[graft.ext.SwapStore]] publishes by directory rename
-    * (HDFS/POSIX); a continuous writer on an object store —
+    * default [[graft.ext.SwapStore]] publishes by local directory
+    * rename; a continuous writer on an object store —
     * the reference's own substrate (S3A/MinIO,
     * ref: mnt/spark-conf/spark-defaults.conf:4-10) — passes
-    * [[graft.ext.ManifestStore.conditionalPut]] so every micro-batch
-    * publish is a conditional manifest create with no rename on the
-    * commit path. Returns the started query; callers own its
-    * lifecycle. */
+    * [[graft.ext.ManifestStore]] so every micro-batch publish is a
+    * conditional manifest create with no rename on the commit path.
+    * Returns the started query; callers own its lifecycle. */
   def sessionsToGold(sessions: Dataset[SessionOut], path: String,
                      checkpointDir: String,
                      store: graft.ext.TableStore = graft.ext.SwapStore)
@@ -374,8 +373,8 @@ object Streams {
     * documented instead (and pinned by spec).
     *
     * `store` picks the table's commit primitive: [[graft.ext.SwapStore]]
-    * (default, directory-rename publish — HDFS/POSIX) or
-    * [[graft.ext.ManifestStore.conditionalPut]] for object stores,
+    * (default, directory-rename publish — local disk) or
+    * [[graft.ext.ManifestStore]] for object stores and HDFS,
     * where the table resolves through manifests and every batch
     * commit is a conditional put (the CDC LOG needs no seam: its
     * dynamic partition overwrite into `batch_id=N` is already

@@ -8,6 +8,8 @@ import org.apache.spark.sql.SparkSession
   * for A/B-ing a change batch without paying a full catalog pass.
   *
   * Usage: runMain graft.tools.TimeMany <q1,q2,...> [sfDir] [runs]
+  * (one query with `runs` = 30 keeps the JVM busy long enough to
+  * sample it with jstack; `jps` finds the pid).
   */
 object TimeMany {
   def main(args: Array[String]): Unit = {

@@ -1585,7 +1585,7 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("versioned: staging residue and malformed names never poison the version listing") {
-    // the r5 regression: RenameCommit staged to `.tmp-<v>.manifest`,
+    // the r5 regression: the rename commit staged to `.tmp-<v>.manifest`,
     // which versions()'s endsWith(".manifest") lister parsed with
     // .toInt → NumberFormatException for any concurrent reader during
     // the commit window, and PERMANENTLY after a crash mid-commit
@@ -1597,7 +1597,7 @@ class ExtSpec extends AnyFunSuite {
     graft.ext.Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // fix 1: the staging file RenameCommit writes must not itself
+    // fix 1: the staging file the HDFS rename fallback writes must not itself
     // match the manifest pattern (observe the name mid-"commit" by
     // writing it the way putIfAbsent stages)
     for (junk <- Seq(
@@ -1824,98 +1824,111 @@ class ExtSpec extends AnyFunSuite {
     assert(op == manual && op.nonEmpty)
   }
 
-  // ─── commit-protocol seam: every crash-window case under BOTH ───
-  // protocols (rename = HDFS/POSIX semantics; put-if-absent =
-  // object-store conditional-put semantics, no rename on the commit
-  // path)
-  for (proto <- Seq(graft.ext.RenameCommit, graft.ext.PutIfAbsentCommit)) {
+  // ─── the commit primitive: Commit.putIfAbsent picks its method from
+  // the path scheme. SchemeLocalFs reports another scheme over a local
+  // disk, so every branch runs here, not only the local hardlink.
+  private def assertPutIfAbsent(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir, "claim.manifest")
+    assert(graft.ext.Commit.putIfAbsent(fs, p, "winner\n".getBytes("UTF-8")))
+    // second writer must LOSE, and the winner's content must survive
+    assert(!graft.ext.Commit.putIfAbsent(fs, p, "loser\n".getBytes("UTF-8")))
+    val got = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "claim.manifest")), "UTF-8")
+    assert(got == "winner\n")
+    // no staging residue left behind by either the win or the loss
+    val residue = new java.io.File(dir).list().toSeq.filterNot(_ == "claim.manifest")
+    assert(residue.isEmpty, s"staging residue: ${residue.mkString(",")}")
+  }
 
-    test(s"commit[${proto.name}]: put-if-absent publishes whole content once; loser keeps winner intact") {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_commit_${proto.name.filter(_.isLetter)}").toString
-      val p = new org.apache.hadoop.fs.Path(dir, "claim.manifest")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(proto.putIfAbsent(fs, p, "winner\n".getBytes("UTF-8")))
-      // second writer must LOSE, and the winner's content must survive
-      assert(!proto.putIfAbsent(fs, p, "loser\n".getBytes("UTF-8")))
-      val in = fs.open(p)
-      val got = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      assert(got == "winner\n")
-      // no staging residue left behind by either the win or the loss
-      val residue = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .map(_.getPath.getName).filterNot(_ == "claim.manifest")
-      assert(residue.isEmpty, s"staging residue: ${residue.mkString(",")}")
-    }
+  test("commit[put-if-absent]: put-if-absent publishes whole content once; loser keeps winner intact") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_commit_local").toString
+    assertPutIfAbsent(new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+  }
 
-    test(s"commit[${proto.name}]: versioned concurrent commit surfaces, never silently drops") {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_vc_${proto.name.filter(_.isLetter)}").toString + "/t"
-      graft.ext.Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir, protocol = proto)
-      val v0name = new java.io.File(dir).listFiles().map(_.getName)
-        .find(_.startsWith("v00000000_data")).get
-      graft.ext.Versioned.commitManifest(spark, dir, 1, Seq(v0name), proto)
-      intercept[IllegalStateException] {
-        graft.ext.Versioned.commitManifest(spark, dir, 1, Seq("v_loser_data"), proto)
-      }
-      assert(graft.ext.Versioned.readVersion(spark, dir, 1)
-        .select("id").as[Long].collect().toSet == Set(1L))
-    }
+  test("commit[whole-object-put]: put-if-absent publishes whole content once; loser keeps winner intact") {
+    // s3a: one conditional create; the loser's FileAlreadyExistsException
+    // maps to false
+    val dir = java.nio.file.Files.createTempDirectory("graft_commit_s3a").toString
+    assertPutIfAbsent(SchemeLocalFs("s3a"), dir)
+  }
 
-    test(s"commit[${proto.name}]: manifest-store upsert crash windows — orphan invisible, table never missing, retry clean") {
-      val store = new graft.ext.ManifestStore(proto)
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_ms_${proto.name.filter(_.isLetter)}").toString + "/t"
-      val t0 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      graft.gold.Upsert.upsertTable(spark, dir, t0, Seq("id"), store)
-      assert(store.exists(spark, dir))
-      // crash window: a v1 rewrite dies mid-data-write (partial dir,
-      // no manifest). The live table must be EXACTLY the pre-crash
-      // state — present, complete, unchanged — with zero recovery work
-      Seq((99L, "junk")).toDF("id", "v").write
-        .parquet(new org.apache.hadoop.fs.Path(dir, "v00000001_data").toString)
-      assert(store.exists(spark, dir), "live table must never be missing mid-crash")
-      assert(store.readLive(spark, dir).select("id").as[Long].collect().toSet == Set(1L, 2L))
-      // the retry does not trip on the wreckage and merges correctly
-      graft.gold.Upsert.upsertTable(spark, dir,
-        Seq((2L, "B2"), (3L, "c")).toDF("id", "v"), Seq("id"), store)
-      val live = store.readLive(spark, dir).as[(Long, String)].collect().toMap
-      assert(live == Map(1L -> "a", 2L -> "B2", 3L -> "c"))
-      // time travel survives the upserts: v0 still reads pre-merge
-      assert(graft.ext.Versioned.readVersion(spark, dir, 0)
-        .select("v").as[String].collect().toSet == Set("a", "b"))
-    }
+  test("commit[rename]: put-if-absent publishes whole content once; loser keeps winner intact") {
+    // an HDFS-like scheme: the stage-and-rename fallback, whose
+    // `.tmp-…staging` file must not outlive the win or the loss
+    val dir = java.nio.file.Files.createTempDirectory("graft_commit_hdfs").toString
+    assertPutIfAbsent(SchemeLocalFs("hdfs"), dir)
+  }
 
-    test(s"commit[${proto.name}]: manifest-store compact shrinks the LIVE file set; history intact; prune reclaims") {
-      val store = new graft.ext.ManifestStore(proto)
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_mc_${proto.name.filter(_.isLetter)}").toString + "/t"
-      graft.ext.Versioned.writeVersionWith(spark, dir, proto)(tmp =>
-        spark.range(1000).toDF("id").repartition(8)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp))
-      val before = store.liveFiles(spark, dir)
-      assert(before.length == 8)
-      val stats = graft.ext.Maintenance.compact(spark, dir,
-        targetFileBytes = Long.MaxValue, store = store)
-      assert(stats.filesBefore == 8 && stats.filesAfter == 1)
-      assert(store.readLive(spark, dir).count() == 1000)
-      // the pre-compaction version is still time-travel readable …
-      assert(graft.ext.Versioned.readVersion(spark, dir, 0).count() == 1000)
-      // … until prune drops it along with its now-dead files
-      graft.ext.Versioned.pruneVersions(spark, dir, keepLast = 1)
-      intercept[IllegalArgumentException] {
-        graft.ext.Versioned.readVersion(spark, dir, 0)
-      }
-      assert(store.readLive(spark, dir).count() == 1000)
-      // deletion vectors thread through the SAME compaction: a DELETE
-      // then compact applies the mask physically (the compactor reads
-      // the masked live view) and drops the dv reference
-      graft.ext.Versioned.deleteByKeys(spark, dir,
-        spark.range(500).toDF("id"), "id", proto)
-      assert(store.readLive(spark, dir).count() == 500)
-      graft.ext.Maintenance.compact(spark, dir,
-        targetFileBytes = Long.MaxValue, store = store)
-      assert(store.readLive(spark, dir).count() == 500)
-      graft.ext.Versioned.pruneVersions(spark, dir, keepLast = 1)
-      val leftover = new java.io.File(dir).listFiles().map(_.getName)
-      assert(!leftover.exists(_.endsWith("_dv")), s"dv survived apply+prune: ${leftover.toSeq}")
-      assert(store.readLive(spark, dir).count() == 500)
+  test("commit[put-if-absent]: versioned concurrent commit surfaces, never silently drops") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vc").toString + "/t"
+    graft.ext.Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir)
+    val v0name = new java.io.File(dir).listFiles().map(_.getName)
+      .find(_.startsWith("v00000000_data")).get
+    graft.ext.Versioned.commitManifest(spark, dir, 1, Seq(v0name))
+    intercept[IllegalStateException] {
+      graft.ext.Versioned.commitManifest(spark, dir, 1, Seq("v_loser_data"))
     }
+    assert(graft.ext.Versioned.readVersion(spark, dir, 1)
+      .select("id").as[Long].collect().toSet == Set(1L))
+  }
+
+  test("commit[put-if-absent]: manifest-store upsert crash windows — orphan invisible, table never missing, retry clean") {
+    val store = graft.ext.ManifestStore
+    val dir = java.nio.file.Files.createTempDirectory("graft_ms").toString + "/t"
+    val t0 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    graft.gold.Upsert.upsertTable(spark, dir, t0, Seq("id"), store)
+    assert(store.exists(spark, dir))
+    // crash window: a v1 rewrite dies mid-data-write (partial dir,
+    // no manifest). The live table must be EXACTLY the pre-crash
+    // state — present, complete, unchanged — with zero recovery work
+    Seq((99L, "junk")).toDF("id", "v").write
+      .parquet(new org.apache.hadoop.fs.Path(dir, "v00000001_data").toString)
+    assert(store.exists(spark, dir), "live table must never be missing mid-crash")
+    assert(store.readLive(spark, dir).select("id").as[Long].collect().toSet == Set(1L, 2L))
+    // the retry does not trip on the wreckage and merges correctly
+    graft.gold.Upsert.upsertTable(spark, dir,
+      Seq((2L, "B2"), (3L, "c")).toDF("id", "v"), Seq("id"), store)
+    val live = store.readLive(spark, dir).as[(Long, String)].collect().toMap
+    assert(live == Map(1L -> "a", 2L -> "B2", 3L -> "c"))
+    // time travel survives the upserts: v0 still reads pre-merge
+    assert(graft.ext.Versioned.readVersion(spark, dir, 0)
+      .select("v").as[String].collect().toSet == Set("a", "b"))
+  }
+
+  test("commit[put-if-absent]: manifest-store compact shrinks the LIVE file set; history intact; prune reclaims") {
+    val store = graft.ext.ManifestStore
+    val dir = java.nio.file.Files.createTempDirectory("graft_mc").toString + "/t"
+    graft.ext.Versioned.writeVersionWith(spark, dir)(tmp =>
+      spark.range(1000).toDF("id").repartition(8)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp))
+    val before = store.liveFiles(spark, dir)
+    assert(before.length == 8)
+    val stats = graft.ext.Maintenance.compact(spark, dir,
+      targetFileBytes = Long.MaxValue, store = store)
+    assert(stats.filesBefore == 8 && stats.filesAfter == 1)
+    assert(store.readLive(spark, dir).count() == 1000)
+    // the pre-compaction version is still time-travel readable …
+    assert(graft.ext.Versioned.readVersion(spark, dir, 0).count() == 1000)
+    // … until prune drops it along with its now-dead files
+    graft.ext.Versioned.pruneVersions(spark, dir, keepLast = 1)
+    intercept[IllegalArgumentException] {
+      graft.ext.Versioned.readVersion(spark, dir, 0)
+    }
+    assert(store.readLive(spark, dir).count() == 1000)
+    // deletion vectors thread through the SAME compaction: a DELETE
+    // then compact applies the mask physically (the compactor reads
+    // the masked live view) and drops the dv reference
+    graft.ext.Versioned.deleteByKeys(spark, dir,
+      spark.range(500).toDF("id"), "id")
+    assert(store.readLive(spark, dir).count() == 500)
+    graft.ext.Maintenance.compact(spark, dir,
+      targetFileBytes = Long.MaxValue, store = store)
+    assert(store.readLive(spark, dir).count() == 500)
+    graft.ext.Versioned.pruneVersions(spark, dir, keepLast = 1)
+    val leftover = new java.io.File(dir).listFiles().map(_.getName)
+    assert(!leftover.exists(_.endsWith("_dv")), s"dv survived apply+prune: ${leftover.toSeq}")
+    assert(store.readLive(spark, dir).count() == 500)
   }
 
   test("versioned: racing appenders all commit via retry; no writer clobbers another's data") {
@@ -1924,18 +1937,16 @@ class ExtSpec extends AnyFunSuite {
     Versioned.writeVersion(Seq((0L, "base")).toDF("id", "v"), dir)
     // 6 concurrent appenders race the version counter; every one must
     // land (unique data dirs + ATOMIC manifest claim + bounded retry).
-    // PutIfAbsentCommit is required for the claim to be atomic on a
-    // local FS: under RenameCommit here, POSIX rename silently
-    // replaces and two racers both "win" — measured, one commit lost
-    // (the documented local-RenameCommit single-writer caveat)
+    // The local claim is a hardlink, which fails on an existing
+    // destination; a POSIX rename would silently replace it and let
+    // two racers both "win"
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     val writers = (1 to 6).map { i =>
       Future(Versioned.appendVersionWithRetry(
-        Seq((i.toLong, s"w$i")).toDF("id", "v"), dir,
-        protocol = graft.ext.PutIfAbsentCommit))
+        Seq((i.toLong, s"w$i")).toDF("id", "v"), dir))
     }
     val committed = Await.result(Future.sequence(writers), 120.seconds)
     // all six landed at distinct versions 1..6
@@ -1979,7 +1990,7 @@ class ExtSpec extends AnyFunSuite {
       Seq((1L, "a"), (2L, "b")), Seq((2L, "B"), (3L, "c")), Seq((1L, "A"), (4L, "d")))
     val stores: Seq[(String, graft.ext.TableStore)] =
       Seq(("swap", graft.ext.SwapStore),
-          ("manifest", graft.ext.ManifestStore.conditionalPut))
+          ("manifest", graft.ext.ManifestStore))
     val results = stores.map { case (nm, store) =>
       val dir = s"$base/$nm"
       batches.foreach(b =>
@@ -2209,7 +2220,7 @@ class ExtSpec extends AnyFunSuite {
     Versioned.commitManifest(spark, dir, 2, Seq("v00000002_data_deadbeef"))
     assert(Versioned.readVersion(spark, dir, 2)
       .select("id").as[Long].collect().toSet == Set(99L))
-    // a crashed PutIfAbsentCommit staging file (.put-*) is swept once
+    // a crashed local put-if-absent staging file (.put-*) is swept once
     // old enough — the advisor's permanent-debris gap
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2727,14 +2738,12 @@ class ExtSpec extends AnyFunSuite {
     }
   }
 
-  test("versioned: restoreVersion threads the commit protocol (object-store path has no rename)") {
+  test("versioned: restoreVersion commits v0's rows, schema and stats as the next version") {
     import graft.ext.Versioned
-    val dir = java.nio.file.Files.createTempDirectory("graft_restore_proto").toString + "/t"
-    Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir,
-      protocol = graft.ext.PutIfAbsentCommit)
-    Versioned.writeVersion(Seq((2L, "b")).toDF("id", "v"), dir,
-      protocol = graft.ext.PutIfAbsentCommit)
-    val v2 = Versioned.restoreVersion(spark, dir, 0, graft.ext.PutIfAbsentCommit)
+    val dir = java.nio.file.Files.createTempDirectory("graft_restore").toString + "/t"
+    Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir)
+    Versioned.writeVersion(Seq((2L, "b")).toDF("id", "v"), dir)
+    val v2 = Versioned.restoreVersion(spark, dir, 0)
     assert(v2 == 2)
     assert(Versioned.readLatest(spark, dir).select("id").as[Long].collect().toSet == Set(1L))
     // the restore carried v0's schema and stats lines with it
@@ -3196,7 +3205,7 @@ class ExtSpec extends AnyFunSuite {
       spark.sql(s"CALL graft_p16.system.drop_feature('$dir', 'pdv')") }
     assert(eLive.getMessage.contains("still live"), eLive.getMessage)
     Maintenance.compact(spark, dir, targetFileBytes = Long.MaxValue,
-      store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
+      store = graft.ext.ManifestStore)
     val dv = spark.sql(
       s"CALL graft_p16.system.drop_feature('$dir', 'pdv')").as[Int].head()
     assert(dv == Versioned.latestVersion(spark, dir).get)
@@ -4543,7 +4552,7 @@ class ExtSpec extends AnyFunSuite {
     // foreign ref remains and the clone survives the source's
     // lifecycle (the documented way out of the shared-file caveat)
     graft.ext.Maintenance.compact(spark, tgt,
-      store = graft.ext.ManifestStore.conditionalPut)
+      store = graft.ext.ManifestStore)
     val vL = Versioned.latestVersion(spark, tgt).get
     assert(Versioned.versionInfo(spark, tgt, vL).dataDirs.forall(_.startsWith(tgt)),
       "compacting a clone must localize every data ref")
@@ -5030,7 +5039,7 @@ class ExtSpec extends AnyFunSuite {
     // retires the line; history still travels to the masked version
     val stats = graft.ext.Maintenance.compact(spark, dir,
       targetFileBytes = Long.MaxValue,
-      store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
+      store = graft.ext.ManifestStore)
     assert(stats.filesAfter == 1)
     assert(nDv == 0, "physical apply must retire the positional dv line")
     assert(Versioned.readLatest(spark, dir)
@@ -5077,7 +5086,7 @@ class ExtSpec extends AnyFunSuite {
     // ids SURVIVE compaction verbatim (they are columns; the rewrite
     // moves rows with their columns)
     graft.ext.Maintenance.compact(spark, dir, targetFileBytes = Long.MaxValue,
-      store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
+      store = graft.ext.ManifestStore)
     assert(idsByKey() == ids1, "compaction must carry every id verbatim")
     // …and a CoW UPDATE keeps the touched row's id
     spark.sql(s"UPDATE graft_rt.`$dir` SET v = 'updated' WHERE k = 7")
@@ -5479,7 +5488,7 @@ class ExtSpec extends AnyFunSuite {
     // …succeeds after the masks apply physically, as one commit
     graft.ext.Maintenance.compact(spark, dir,
       targetFileBytes = Long.MaxValue,
-      store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
+      store = graft.ext.ManifestStore)
     assert(Versioned.dropTableFeature(spark, dir, "pdv").nonEmpty)
     assert(Versioned.tableFeatures(spark, dir,
       Versioned.latestVersion(spark, dir).get).isEmpty)
@@ -5605,7 +5614,7 @@ class ExtSpec extends AnyFunSuite {
       .as[Double].head() == (0L until 200L).map(_ % 10).sum.toDouble)
     // compaction applies the mask physically and the content holds
     graft.ext.Maintenance.compact(spark, dir, targetFileBytes = Long.MaxValue,
-      store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
+      store = graft.ext.ManifestStore)
     val vc = Versioned.latestVersion(spark, dir).get
     assert(Versioned.versionInfo(spark, dir, vc).posDvs.isEmpty)
     assert(spark.sql(s"SELECT id, price FROM graft_du.`$dir`")
@@ -6307,18 +6316,16 @@ class ExtSpec extends AnyFunSuite {
 
   test("maintenance seams: protocol-threaded partitioned compact, legacy-gated maintain, 4-col zorder defaults, scoped compact bytes") {
     import org.apache.spark.sql.SaveMode
-    import graft.ext.{Maintenance, ManifestStore, RenameCommit, Versioned}
+    import graft.ext.{Maintenance, ManifestStore, Versioned}
     val root = java.nio.file.Files.createTempDirectory("graft_maint_seams").toString
-    // 1) the partitioned compact branch honors the CALLER's commit
-    // protocol (it used to hard-code put-if-absent; CommitProtocol is
-    // sealed, so the pin is behavioral: the rename-protocol store runs
-    // the whole partition-shaped rewrite end to end)
+    // 1) a partitioned chain compacted through the manifest store runs
+    // the whole spec-keeping partition-shaped rewrite end to end
     val pdir = root + "/p"
     val rows = (0 until 800).map(i => (i.toLong, i % 4, s"v$i")).toDF("id", "bucket", "payload")
     Versioned.writeVersionPartitioned(rows.repartition(4), pdir, Seq("bucket"))
     Versioned.writeVersionPartitioned(rows.repartition(4), pdir, Seq("bucket"), SaveMode.Append)
     val st = Maintenance.compact(spark, pdir, 512L * 1024 * 1024,
-      store = new ManifestStore(RenameCommit))
+      store = ManifestStore)
     assert(st.filesAfter < st.filesBefore && st.totalBytes > 0, st.toString)
     assert(Versioned.readLatest(spark, pdir).count() == 1600)
     // 2) a LEGACY pre-file-list chain with the fragmentation gate on:
@@ -7396,7 +7403,7 @@ class ExtSpec extends AnyFunSuite {
       assert(Versioned.readLatest(spark, dirF).count() == 99)
       Versioned.writeVersion(Seq((200L, 0L)).toDF("id", "k").coalesce(1),
         dirF, SaveMode.Append)
-      Maintenance.compact(spark, dirF, store = graft.ext.ManifestStore.conditionalPut)
+      Maintenance.compact(spark, dirF, store = graft.ext.ManifestStore)
       val cvF = Versioned.latestVersion(spark, dirF).get
       assert(Versioned.isRearrange(spark, dirF, cvF))
       assert(Versioned.readLatest(spark, dirF).count() == 100)

@@ -67,6 +67,44 @@ class GoldSpec extends AnyFunSuite {
     assert(got.toSeq == Seq((1, "a"), (2, "B"), (3, "c")))
   }
 
+  test("upsertParquet: a non-local scheme is refused before anything is written") {
+    val path = s"s3a://graft-swap-${java.util.UUID.randomUUID()}/t"
+    val e = intercept[IllegalArgumentException] {
+      Upsert.upsertParquet(spark, path, Seq((1, "a")).toDF("id", "v"), Seq("id"))
+    }
+    assert(e.getMessage.contains("ManifestStore"), e.getMessage)
+    // nothing appears where the string would land read as a relative local path
+    for (p <- Seq(path, path + "__upsert_tmp", path + "__old"))
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p)), p)
+  }
+
+  test("upsertParquet: a file: URI path bootstraps, then merges in place") {
+    val local = java.nio.file.Files.createTempDirectory("upsert_uri").resolve("t")
+    val uri = local.toUri.toString
+    assert(uri.startsWith("file:"))
+    Upsert.upsertParquet(spark, uri, Seq((1, "a"), (2, "b")).toDF("id", "v"), Seq("id"))
+    Upsert.upsertParquet(spark, uri, Seq((2, "B"), (3, "c")).toDF("id", "v"), Seq("id"))
+    // row 1 survives only if the second call merged instead of bootstrapping
+    val got = spark.read.parquet(uri).orderBy("id").as[(Int, String)].collect()
+    assert(got.toSeq == Seq((1, "a"), (2, "B"), (3, "c")))
+    assert(local.getParent.toFile.list().toSeq == Seq("t"))
+  }
+
+  test("upsertParquet: a table dir named with a space merges, as a plain path and as a file: path") {
+    val root = java.nio.file.Files.createTempDirectory("upsert_space")
+    for ((form, toArg) <- Seq[(String, java.nio.file.Path => String)](
+           "plain" -> (_.toString), "file" -> (p => s"file:$p"))) {
+      val local = root.resolve(form).resolve("my gold")
+      val path = toArg(local)
+      Upsert.upsertParquet(spark, path, Seq((1, "a"), (2, "b")).toDF("id", "v"), Seq("id"))
+      Upsert.upsertParquet(spark, path, Seq((2, "B"), (3, "c")).toDF("id", "v"), Seq("id"))
+      val got = spark.read.parquet(path).orderBy("id").as[(Int, String)].collect()
+      assert(got.toSeq == Seq((1, "a"), (2, "B"), (3, "c")), form)
+      // the merge went through the swap: no percent-encoded stray beside the table
+      assert(local.getParent.toFile.list().toSeq == Seq("my gold"), form)
+    }
+  }
+
   test("mergeEvolve: added column null-backfills, dropped column null-forwards, types align") {
     val target = Seq((1, "old", 10.0), (2, "keep", 20.0)).toDF("id", "v", "x")
     // updates add `y`, lack `x`, and carry `v` as an int (must cast to

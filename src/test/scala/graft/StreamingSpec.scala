@@ -147,7 +147,7 @@ class StreamingSpec extends AnyFunSuite {
   // under BOTH table stores
   private val sinkStores: Seq[(String, graft.ext.TableStore)] =
     Seq(("swap", graft.ext.SwapStore),
-        ("manifest", graft.ext.ManifestStore.conditionalPut))
+        ("manifest", graft.ext.ManifestStore))
 
   for ((storeName, store) <- sinkStores)
   test(s"streaming sessions land in a gold table [$storeName] via foreachBatch upsert and re-read") {
